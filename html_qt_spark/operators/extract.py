@@ -4,7 +4,7 @@ Two physical strategies for the same logical op (BASELINE.json north_star:
 "batch-tokenize raw HTML bytes ... emit ordered (kind,text,media_ref,offset)
 spans per document"):
 
-``extract_spans_doc``  — document-at-a-time ``mapInPandas``.  ZERO shuffles:
+``extract_spans_doc``  — document-at-a-time ``mapInArrow``.  ZERO shuffles:
     each input row (doc_id, spans) maps to its output spans inside one Arrow
     batch.  This is the default path; at 10^12 docs the job is then scan →
     narrow map → write, and scales linearly with executors.
@@ -16,8 +16,13 @@ spans per document"):
     parallelism — use when doc-size skew stalls stragglers (SURVEY.md §4.2:
     value-computation skew AQE cannot see).
 
-Both run the same pure-Python kernel (html_qt_spark.kernel) inside Arrow
-batches — no per-row Python UDFs (input_hint mandate).
+Both are thin callers of ONE batch operator, :func:`extract_span_batch`,
+which holds every span rule (media pass-through, empty drop, oversize and
+kernel-failure quarantine, per-group numbering) over flat Arrow arrays.
+Doc mode groups spans by document, exploded mode makes every row its own
+group.  Python runs only for the residue the RE2 batch classifier
+(kernel/trivialbatch.py) cannot settle — no per-row Python UDFs
+(input_hint mandate).
 """
 
 from __future__ import annotations
@@ -40,42 +45,193 @@ OUT_SCHEMA = T.StructType([
     T.StructField("offset", T.IntegerType()),
 ])
 
-_FRAGMENT_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-]))
-
 
 QUARANTINE_KIND = "__quarantine__"
 
-# extraction thresholds of the exploded path (kept in ONE place: the
-# vectorized batch path and its row-loop fallback must apply the same
-# values, or output would depend on which physical path a batch took)
-_EXPLODED_MIN_WORDS = 1
-_EXPLODED_MAX_LINK_DENSITY = 0.5
+
+def extract_span_batch(kind, text, media_ref, group, *,
+                       reference_compat: bool = False,
+                       fragment_context: str | None = None,
+                       max_span_bytes: int | None = None):
+    """Extract a flat batch of spans that belong to groups (documents).
+
+    ``kind``, ``text`` (string or binary) and ``media_ref`` are parallel
+    Arrow arrays with one value per input span; ``group`` is a numpy
+    int array of each span's group id, non-decreasing in span order.
+    Returns a RecordBatch with one row per output span: ``group``,
+    ``span`` (the source span's index; the failing span's on a
+    quarantine row), ``idx`` (running index within
+    the group, in span order), ``kind``, ``text``, ``media_ref``.
+    Rows are grouped by path, not sorted; ``idx`` carries the order.
+
+    The rules, held here once for both operators:
+
+    - a ``media`` span passes through as one row (binary text decoded
+      as UTF-8 with ``replace``);
+    - a null or empty text span emits nothing;
+    - a text span longer than ``max_span_bytes`` (codepoints; bytes
+      for binary text) is a failure;
+    - string text outside ``reference_compat`` / ``fragment_context``
+      is classified by the RE2 batch path (``vec_trivial``), and only
+      the residue runs ``extract_html``, in ascending span order —
+      spans after their group's first failure never run;
+    - a failed group collapses to ONE ``QUARANTINE_KIND`` row (idx 0,
+      media_ref null) whose text is the first failure in span order.
+
+    Poison-pill policy: the engine version of the reference's fatal
+    no-progress guard (html-qt/htmltokenizer.cpp:66-80), made non-fatal
+    — a 10^12-doc job must not die on one span.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    # looked up at call time, so a patched extractor.extract_html runs
+    from html_qt_spark.kernel.extractor import extract_html
+    from html_qt_spark.kernel.trivialbatch import filter_blocks, vec_trivial
+
+    n = len(kind)
+    str_ty = pa.string()
+    group = np.asarray(group, dtype=np.int64)
+    textual = pa.types.is_string(text.type)
+    media = pc.fill_null(pc.equal(kind, "media"), False).to_numpy(
+        zero_copy_only=False)
+    # byte length settles emptiness from the offsets alone; the oversize
+    # cap counts codepoints of string text, as len() does
+    length = pc.utf8_length(text) if textual and max_span_bytes \
+        else pc.binary_length(text)
+    tlen = pc.fill_null(length, 0).to_numpy(zero_copy_only=False)
+    text_ok = ~media & (tlen > 0)
+    oversize = text_ok & (tlen > max_span_bytes) if max_span_bytes \
+        else np.zeros(n, dtype=bool)
+
+    accepted = np.zeros(n, dtype=bool)
+    norm_kept = pa.array([], str_ty)
+    kept_span = within = np.empty(0, np.int64)
+    if textual and not reference_compat and fragment_context is None:
+        accepted, norm_kept, kept_span = vec_trivial(text)
+        accepted = accepted & text_ok & ~oversize
+        # vec_trivial classified EVERY value (media text included); drop
+        # the blocks of spans the masks above just rejected
+        norm_kept, kept_span, within = filter_blocks(
+            norm_kept, kept_span, accepted)
+
+    # failures, in span order: a group's first failure stops it — a
+    # residue span after a known oversize span or after a kernel
+    # exception in its group never runs
+    n_groups = int(group[-1]) + 1 if n else 0
+    first_fail = np.full(n_groups, n, dtype=np.int64)
+    fails: dict[int, str] = {}
+    for j in np.flatnonzero(oversize).tolist():
+        # codepoint length from the vectorized scan — never
+        # materialize the (by definition huge) span itself
+        fails[j] = f"ValueError:oversize-span:{int(tlen[j])}"
+        first_fail[group[j]] = min(first_fail[group[j]], j)
+    residue = np.flatnonzero(text_ok & ~accepted & ~oversize)
+    results: dict[int, list] = {}
+    for j, html in zip(residue.tolist(),
+                       pc.take(text, pa.array(residue)).to_pylist()):
+        g = group[j]
+        if j > first_fail[g]:
+            continue
+        try:
+            results[j] = extract_html(
+                html, reference_compat=reference_compat,
+                fragment_context=fragment_context)
+        except Exception as exc:  # noqa: BLE001 — poison pill
+            fails[j] = f"{type(exc).__name__}:{exc}"[:512]
+            first_fail[g] = j
+    span_ok = (first_fail == n)[group]
+
+    # per-span output counts -> running idx base within the group (a
+    # failed group's counts never reach a surviving group's base)
+    n_out = np.bincount(kept_span, minlength=n)
+    n_out[media] = 1
+    for j, res in results.items():
+        n_out[j] = len(res)
+    csum = np.concatenate(([0], np.cumsum(n_out)))
+    base = csum[:-1] - csum[np.searchsorted(group, group)]
+
+    jm = np.flatnonzero(media & span_ok)
+    jm_pa = pa.array(jm, pa.int64())
+    media_text = pc.take(text, jm_pa)
+    media_text = media_text.cast(str_ty) if textual else pa.array(
+        [None if v is None else v.decode("utf-8", "replace")
+         for v in media_text.to_pylist()], str_ty)
+    vk = span_ok[kept_span]
+    if not vk.all():
+        kept_span, within = kept_span[vk], within[vk]
+        norm_kept = pc.filter(norm_kept, pa.array(vk))
+    p_span: list[int] = []
+    p_idx: list[int] = []
+    p_kind: list[str] = []
+    p_text: list[str | None] = []
+    p_ref: list[str | None] = []
+    for j, res in results.items():
+        if not span_ok[j]:
+            continue
+        for i, (k, t, m) in enumerate(res):
+            p_span.append(j)
+            p_idx.append(int(base[j]) + i)
+            p_kind.append(k)
+            p_text.append(t)
+            p_ref.append(m)
+    q_group = np.flatnonzero(first_fail < n)
+    q_span = first_fail[q_group]
+
+    nm, nv, nq = len(jm), len(kept_span), len(q_group)
+    span = np.concatenate([jm, kept_span, np.asarray(p_span, np.int64),
+                           q_span])
+    idx = np.concatenate([base[jm], base[kept_span] + within,
+                          np.asarray(p_idx, np.int64),
+                          np.zeros(nq, np.int64)])
+    return pa.RecordBatch.from_arrays([
+        pa.array(group[span], pa.int64()),
+        pa.array(span, pa.int64()),
+        pa.array(idx.astype(np.int32), pa.int32()),
+        pa.array(["media"] * nm + ["text"] * nv + p_kind
+                 + [QUARANTINE_KIND] * nq, str_ty),
+        pa.concat_arrays([
+            media_text, norm_kept.cast(str_ty), pa.array(p_text, str_ty),
+            pa.array([fails[int(j)] for j in q_span], str_ty)]),
+        pa.concat_arrays([
+            pc.take(media_ref, jm_pa).cast(str_ty), pa.nulls(nv, str_ty),
+            pa.array(p_ref, str_ty), pa.nulls(nq, str_ty)]),
+    ], names=["group", "span", "idx", "kind", "text", "media_ref"])
+
+
+def _doc_batch(rb, **opts):
+    """One (doc_id, kinds, texts, refs, offsets) batch of parallel span
+    lists -> OUT_SCHEMA rows.  A document is a group; a null span list
+    has no spans and so no rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    doc_id, kinds, texts, refs, offsets = rb.columns
+    out = extract_span_batch(
+        pc.list_flatten(kinds), pc.list_flatten(texts),
+        pc.list_flatten(refs),
+        pc.list_parent_indices(kinds).to_numpy(zero_copy_only=False),
+        **opts)
+    kind = out.column("kind")
+    offset = pc.take(pc.list_flatten(offsets), out.column("span"))
+    return pa.RecordBatch.from_arrays([
+        pc.take(doc_id, out.column("group")).cast(pa.string()),
+        out.column("idx"), kind, out.column("text"),
+        out.column("media_ref"),
+        pc.if_else(pc.equal(kind, QUARANTINE_KIND), 0, offset)
+        .cast(pa.int32()),
+    ], names=["doc_id", "span_idx", "kind", "text", "media_ref", "offset"])
 
 
 def extract_spans_doc(df: DataFrame, *, reference_compat: bool = False,
-                      max_link_density: float = 0.5,
-                      min_words: int = 1,
                       max_span_bytes: int | None = None,
-                      fragment_context: str | None = None,
-                      memoize_spans: int = 0) -> DataFrame:
+                      fragment_context: str | None = None) -> DataFrame:
     """(doc_id, spans) → (doc_id, span_idx, kind, text, media_ref, offset).
 
     Narrow transformation: no shuffle, no driver round-trip.  Input text
     spans run through the fused tokenize→tree→extract kernel; media spans
     pass through at their document position.
-
-    ``memoize_spans``: per-task cache of up to N extraction results
-    keyed by the exact span bytes (default 0 = off).  In real crawls the
-    nav/footer/banner spans of a site are BYTE-IDENTICAL across its
-    pages (the same repetition paragraph-dedup exploits downstream), so
-    a bounded memo turns those re-parses into dict hits.  Extraction is
-    a pure function of (html, flags) — memoization cannot change
-    results, which tests/test_spark_pipeline.py pins by equality.  Off
-    by default so benchmarks measure parsing, not caching.
 
     ``fragment_context``: parse each text span with innerHTML semantics
     as the contents of that context element (WHATWG 13.4) — a crawl
@@ -84,310 +240,26 @@ def extract_spans_doc(df: DataFrame, *, reference_compat: bool = False,
     full-document state machine.  Threads straight to the kernel
     (kernel/extractor.py::extract_html).
 
-    Poison-pill policy (engine version of the reference's fatal
-    no-progress guard, html-qt/htmltokenizer.cpp:66-80, made non-fatal —
-    a 10^12-doc job must not die on one doc): a span larger than
-    ``max_span_bytes`` or a kernel exception quarantines the DOCUMENT
-    into rows with kind=QUARANTINE_KIND (reason in ``text``) instead of
-    failing the task.
+    A span larger than ``max_span_bytes`` or a kernel exception
+    quarantines the DOCUMENT into one row with kind=QUARANTINE_KIND
+    (reason in ``text``, offset 0) instead of failing the task; rules in
+    :func:`extract_span_batch`.
     """
 
     def process(batches):
-        # import inside the worker so the kernel ships via --py-files
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from html_qt_spark.kernel.extractor import extract_html
-        from html_qt_spark.kernel.trivialbatch import (
-            filter_blocks,
-            vec_trivial,
-        )
-
-        memo: dict[str, list] | None = {} if memoize_spans else None
-        # the vectorized batch path (guide §4.2) handles plain document
-        # parsing; every special mode keeps the row loop
-        vec_enabled = (not reference_compat and fragment_context is None
-                       and not memoize_spans)
-
-        def vec_batch(rb):
-            """Arrow-native batch extraction; None -> use the row loop.
-
-            Only the rare python-path spans (outside the trivial
-            grammar) and quarantine messages are materialized as Python
-            strings; everything else moves by pyarrow take/concat over
-            the input buffers.  Output row order is grouped by span
-            category — the operator's contract orders spans via the
-            explicit span_idx column, which is computed per document
-            exactly as the row loop counts it."""
-            dk, dt, dr, do = (rb.column(1), rb.column(2),
-                              rb.column(3), rb.column(4))
-            if not (pa.types.is_list(dk.type) and pa.types.is_list(dt.type)
-                    and pa.types.is_list(dr.type)
-                    and pa.types.is_list(do.type)):
-                return None
-            if not (pa.types.is_string(dt.type.value_type)
-                    and pa.types.is_string(dk.type.value_type)
-                    and pa.types.is_string(dr.type.value_type)):
-                return None
-            if dk.null_count or dt.null_count or dr.null_count \
-                    or do.null_count:
-                return None  # null span lists: row loop handles them
-            offs = dk.offsets.to_numpy().astype(np.int64)
-            if not (np.array_equal(offs, dt.offsets.to_numpy())
-                    and np.array_equal(offs, dr.offsets.to_numpy())
-                    and np.array_equal(offs, do.offsets.to_numpy())):
-                return None  # ragged struct-of-lists: row loop
-            lo, hi = int(offs[0]), int(offs[-1])
-            kv = dk.values.slice(lo, hi - lo)
-            tvv = dt.values.slice(lo, hi - lo)
-            rvv = dr.values.slice(lo, hi - lo)
-            ovv = do.values.slice(lo, hi - lo)
-            if ovv.null_count:
-                return None  # null offsets: to_numpy below would mangle
-            offs = offs - lo
-            n_docs = rb.num_rows
-            n_spans = hi - lo
-            counts = np.diff(offs)
-            span_doc = np.repeat(np.arange(n_docs), counts)
-            ov_np = ovv.to_numpy(zero_copy_only=False).astype(np.int32)
-
-            media = pc.fill_null(pc.equal(kv, "media"), False).to_numpy(
-                zero_copy_only=False)
-            text_ok = pc.fill_null(pc.not_equal(tvv, ""), False).to_numpy(
-                zero_copy_only=False) & ~media
-            if max_span_bytes:
-                tlens = pc.fill_null(pc.utf8_length(tvv), 0).to_numpy(
-                    zero_copy_only=False)
-                oversize = text_ok & (tlens > max_span_bytes)
-            else:
-                oversize = np.zeros(n_spans, dtype=bool)
-
-            vec = vec_trivial(tvv, min_words=min_words,
-                              max_link_density=max_link_density)
-            if vec is None:
-                return None
-            accepted, norm_kept, kept_span = vec
-            accepted = accepted & text_ok & ~oversize
-            # vec_trivial classified EVERY value (even media-span text);
-            # drop blocks of spans the category masks just rejected
-            norm_kept, kept_span, within_all = filter_blocks(
-                norm_kept, kept_span, accepted)
-
-            # oversize quarantines are known before any extraction; the
-            # row loop stops a doc at its first failure, so spans after
-            # a known failure need no python work (their rows would be
-            # discarded) — spans BEFORE it still run, and their own
-            # earlier exception would win the quarantine message
-            fails: dict[int, str] = {}
-            for j in np.flatnonzero(oversize):
-                # codepoint length comes from the vectorized scan above —
-                # never materialize the (by definition huge) span itself
-                fails[int(j)] = f"ValueError:oversize-span:{int(tlens[j])}"
-            first_fail = np.full(n_docs, n_spans + 1, dtype=np.int64)
-            for j in fails:
-                d = int(span_doc[j])
-                first_fail[d] = min(first_fail[d], j)
-
-            # python residue: outside the trivial grammar
-            py_mask = text_ok & ~accepted & ~oversize
-            py_res: dict[int, list] = {}
-            py_idx = np.flatnonzero(
-                py_mask & (np.arange(n_spans) < first_fail[span_doc]))
-            if len(py_idx):
-                for j, html in zip(
-                        py_idx,
-                        pc.take(tvv, pa.array(py_idx)).to_pylist()):
-                    try:
-                        py_res[int(j)] = extract_html(
-                            html, reference_compat=reference_compat,
-                            max_link_density=max_link_density,
-                            min_words=min_words,
-                            fragment_context=fragment_context)
-                    except Exception as exc:  # noqa: BLE001 — poison pill
-                        fails[int(j)] = f"{type(exc).__name__}:{exc}"[:512]
-
-            # quarantine: first failing span (in document order) wins;
-            # the whole document collapses to one quarantine row
-            q_doc: dict[int, str] = {}
-            for j in sorted(fails):
-                d = int(span_doc[j])
-                if d not in q_doc:
-                    q_doc[d] = fails[j]
-            doc_ok = np.ones(n_docs, dtype=bool)
-            if q_doc:
-                doc_ok[list(q_doc)] = False
-
-            # per-span output counts -> per-doc running span_idx base
-            n_out = np.zeros(n_spans, dtype=np.int64)
-            n_out[media] = 1
-            if len(kept_span):
-                n_out += np.bincount(kept_span, minlength=n_spans)
-            for j, res in py_res.items():
-                n_out[j] = len(res)
-            n_out[~doc_ok[span_doc]] = 0
-            c_excl = np.concatenate(([0], np.cumsum(n_out)[:-1]))
-            doc_base = np.concatenate(
-                ([0], np.cumsum(n_out)))[offs[:-1]]
-            base = c_excl - doc_base[span_doc]
-
-            # media rows
-            jm = np.flatnonzero(media & doc_ok[span_doc])
-            jm_pa = pa.array(jm)
-            # vec rows (drop blocks of quarantined docs; per-span
-            # ordinals survive whole-span filtering unchanged)
-            if len(kept_span):
-                vkeep = doc_ok[span_doc[kept_span]]
-                ks = kept_span[vkeep]
-                within = within_all[vkeep]
-                vec_text = pc.filter(norm_kept, pa.array(vkeep))
-                if isinstance(vec_text, pa.ChunkedArray):
-                    vec_text = vec_text.combine_chunks()
-            else:
-                ks = np.empty(0, np.int64)
-                vec_text = pa.array([], pa.string())
-                within = np.empty(0, np.int64)
-            # python rows
-            p_doc: list[int] = []
-            p_idx: list[int] = []
-            p_kind: list[str] = []
-            p_text: list[str | None] = []
-            p_ref: list[str | None] = []
-            p_off: list[int] = []
-            for j, res in py_res.items():
-                if not doc_ok[span_doc[j]]:
-                    continue
-                b = int(base[j])
-                d = int(span_doc[j])
-                o = int(ov_np[j])
-                for i, (k, t, m) in enumerate(res):
-                    p_doc.append(d)
-                    p_idx.append(b + i)
-                    p_kind.append(k)
-                    p_text.append(t)
-                    p_ref.append(m)
-                    p_off.append(o)
-            nq = len(q_doc)
-            q_docs = sorted(q_doc)
-
-            nm, nv = len(jm), len(ks)
-            doc_sel = np.concatenate([
-                span_doc[jm], span_doc[ks],
-                np.asarray(p_doc, dtype=np.int64),
-                np.asarray(q_docs, dtype=np.int64)])
-            str_ty = pa.string()
-            text_col = pa.concat_arrays([
-                pc.take(tvv, jm_pa).cast(str_ty),
-                vec_text.cast(str_ty),
-                pa.array(p_text, str_ty),
-                pa.array([q_doc[d] for d in q_docs], str_ty)])
-            ref_col = pa.concat_arrays([
-                pc.take(rvv, jm_pa).cast(str_ty),
-                pa.nulls(nv, str_ty),
-                pa.array(p_ref, str_ty),
-                pa.nulls(nq, str_ty)])
-            kind_col = pa.array(
-                ["media"] * nm + ["text"] * nv + p_kind
-                + [QUARANTINE_KIND] * nq, str_ty)
-            idx_col = pa.array(np.concatenate([
-                base[jm], base[ks] + within,
-                np.asarray(p_idx, dtype=np.int64),
-                np.zeros(nq, np.int64)]).astype(np.int32), pa.int32())
-            off_col = pa.array(np.concatenate([
-                ov_np[jm], ov_np[ks],
-                np.asarray(p_off, dtype=np.int64),
-                np.zeros(nq, np.int64)]).astype(np.int32), pa.int32())
-            doc_col = pc.take(rb.column(0), pa.array(doc_sel)).cast(str_ty)
-            return pa.RecordBatch.from_arrays(
-                [doc_col, idx_col, kind_col, text_col, ref_col, off_col],
-                names=["doc_id", "span_idx", "kind", "text",
-                       "media_ref", "offset"])
-
-        def extract_cached(html: str) -> list:
-            if memo is None:
-                return extract_html(
-                    html, reference_compat=reference_compat,
-                    max_link_density=max_link_density,
-                    min_words=min_words,
-                    fragment_context=fragment_context)
-            spans = memo.get(html)
-            if spans is None:
-                spans = extract_html(
-                    html, reference_compat=reference_compat,
-                    max_link_density=max_link_density,
-                    min_words=min_words,
-                    fragment_context=fragment_context)
-                if len(memo) >= memoize_spans:
-                    memo.clear()  # bounded: flush-on-full beats LRU bookkeeping
-                memo[html] = spans
-            return spans
-
-        str_t, int_t = pa.string(), pa.int32()
         for rb in batches:
-            if vec_enabled:
-                out = vec_batch(rb)
-                if out is not None:
-                    yield out
-                    continue
-            doc_ids: list[str] = []
-            span_idxs: list[int] = []
-            kinds: list[str] = []
-            texts: list[str | None] = []
-            refs: list[str | None] = []
-            offsets: list[int] = []
-
-            def emit(doc_id, idx, kind, text, ref, offset) -> None:
-                doc_ids.append(doc_id)
-                span_idxs.append(idx)
-                kinds.append(kind)
-                texts.append(text)
-                refs.append(ref)
-                offsets.append(offset)
-
-            for doc_id, s_kinds, s_texts, s_refs, s_offsets in zip(
-                    rb.column(0).to_pylist(), rb.column(1).to_pylist(),
-                    rb.column(2).to_pylist(), rb.column(3).to_pylist(),
-                    rb.column(4).to_pylist()):
-                idx = 0
-                if s_kinds is None:
-                    continue
-                mark = len(doc_ids)
-                try:
-                    for kind, html, ref, offset in zip(
-                            s_kinds, s_texts, s_refs, s_offsets):
-                        if kind == "media":
-                            if isinstance(html, (bytes, bytearray)):
-                                html = bytes(html).decode("utf-8", "replace")
-                            emit(doc_id, idx, "media", html, ref, offset)
-                            idx += 1
-                            continue
-                        if not html:
-                            continue
-                        if max_span_bytes and len(html) > max_span_bytes:
-                            raise ValueError(
-                                f"oversize-span:{len(html)}")
-                        for k, t, m in extract_cached(html):
-                            emit(doc_id, idx, k, t, m, offset)
-                            idx += 1
-                except Exception as exc:  # noqa: BLE001 — poison pill
-                    del doc_ids[mark:], span_idxs[mark:], kinds[mark:]
-                    del texts[mark:], refs[mark:], offsets[mark:]
-                    emit(doc_id, 0, QUARANTINE_KIND,
-                         f"{type(exc).__name__}:{exc}"[:512], None, 0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, str_t), pa.array(span_idxs, int_t),
-                 pa.array(kinds, str_t), pa.array(texts, str_t),
-                 pa.array(refs, str_t), pa.array(offsets, int_t)],
-                names=["doc_id", "span_idx", "kind", "text",
-                       "media_ref", "offset"])
+            yield _doc_batch(rb, reference_compat=reference_compat,
+                             fragment_context=fragment_context,
+                             max_span_bytes=max_span_bytes)
 
     # Flatten array<struct> into four parallel primitive arrays BEFORE the
     # Arrow boundary: Arrow conversion of array<struct> builds one Python
     # dict per span (measured ~2.5x the whole kernel cost); four primitive
     # list columns convert as flat buffers.  JVM-side projection, still
-    # zero shuffles.  mapInArrow (not mapInPandas): the kernel loop needs
-    # plain Python lists, so the pandas Series/Block layer in between is
-    # pure overhead on both sides of the boundary.
+    # zero shuffles.  All four come from one array, so their list
+    # offsets and nulls always agree.  mapInArrow (not mapInPandas): the
+    # batch core works on the Arrow arrays themselves, so a pandas layer
+    # would be pure overhead on both sides of the boundary.
     flat = df.select(
         "doc_id",
         F.col("spans.kind").alias("_kinds"),
@@ -396,34 +268,6 @@ def extract_spans_doc(df: DataFrame, *, reference_compat: bool = False,
         F.col("spans.offset").alias("_offsets"),
     )
     return flat.mapInArrow(process, schema=OUT_SCHEMA)
-
-
-@F.pandas_udf(_FRAGMENT_SCHEMA)
-def _extract_fragment(html: pd.Series) -> pd.Series:
-    """HTML fragment → array<struct<kind,text,media_ref>> (Arrow-batched).
-
-    Poison-pill: a kernel exception yields one QUARANTINE_KIND entry for
-    the fragment instead of failing the task (same policy as the
-    doc-mode path)."""
-    from html_qt_spark.kernel.extractor import extract_html
-
-    out = []
-    for doc in html:
-        if not doc:
-            out.append([])
-            continue
-        try:
-            out.append([
-                {"kind": k, "text": t, "media_ref": m}
-                for k, t, m in extract_html(doc)
-            ])
-        except Exception as exc:  # noqa: BLE001 — poison pill
-            out.append([{
-                "kind": QUARANTINE_KIND,
-                "text": f"{type(exc).__name__}:{exc}"[:512],
-                "media_ref": None,
-            }])
-    return pd.Series(out)
 
 
 DOC_STATS_SCHEMA = T.StructType([
@@ -641,16 +485,6 @@ def doc_parse_stats(df: DataFrame) -> DataFrame:
     return flat.mapInPandas(process, schema=DOC_STATS_SCHEMA)
 
 
-_EXPLODED_MID_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("offset", T.IntegerType()),
-    T.StructField("_chunk", T.IntegerType()),
-    T.StructField("_inner", T.IntegerType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-])
-
 # block-start tags are safe HTML cut points for the extractor: a block tag
 # always flushes the open text block, so no emitted text span straddles a
 # cut (chunk-extraction == whole-extraction on block-structured content)
@@ -719,6 +553,29 @@ def chunk_split_exploded(df_exploded: DataFrame, *,
     return passthrough.select(*cols).unionByName(chunks.select(*cols))
 
 
+def _exploded_batch(rb, **opts):
+    """One (doc_id, offset, _chunk, kind, text, media_ref) batch ->
+    extracted rows numbered by ``_inner``.  Every row is its own group,
+    so a failing span quarantines only itself; doc_id, offset and
+    _chunk come from the row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    doc_id, offset, chunk, kind, text, media_ref = rb.columns
+    out = extract_span_batch(kind, text, media_ref,
+                             np.arange(rb.num_rows), **opts)
+    row = out.column("group")
+    return pa.RecordBatch.from_arrays([
+        pc.take(doc_id, row).cast(pa.string()),
+        pc.take(offset, row).cast(pa.int32()),
+        pc.take(chunk, row).cast(pa.int32()),
+        out.column("idx"), out.column("kind"), out.column("text"),
+        out.column("media_ref"),
+    ], names=["doc_id", "offset", "_chunk", "_inner", "kind", "text",
+              "media_ref"])
+
+
 def extract_spans_exploded(df_exploded: DataFrame, *,
                            fragment_context: str | None = None
                            ) -> DataFrame:
@@ -740,168 +597,18 @@ def extract_spans_exploded(df_exploded: DataFrame, *,
         df_exploded = df_exploded.withColumn("_chunk", F.lit(0))
 
     def process(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from html_qt_spark.kernel.extractor import extract_html
-        from html_qt_spark.kernel.trivialbatch import (
-            filter_blocks,
-            vec_trivial,
-        )
-
-        vec_enabled = fragment_context is None
-
-        def vec_batch(rb):
-            """Arrow-native flat-row extraction; None -> row loop.
-            Mirrors the row loop exactly: media rows pass through,
-            empty text drops, a failing span quarantines ITSELF (one
-            row), and _inner numbers each span's outputs in order.
-            Row order is grouped by category; the downstream window
-            orders on (offset, _chunk, _inner), never on row order."""
-            kvc, tvc = rb.column(3), rb.column(4)
-            if not (pa.types.is_string(kvc.type)
-                    and pa.types.is_string(tvc.type)):
-                return None
-            media = pc.fill_null(pc.equal(kvc, "media"), False).to_numpy(
-                zero_copy_only=False)
-            text_ok = pc.fill_null(pc.not_equal(tvc, ""), False).to_numpy(
-                zero_copy_only=False) & ~media
-            vec = vec_trivial(tvc, min_words=_EXPLODED_MIN_WORDS,
-                              max_link_density=_EXPLODED_MAX_LINK_DENSITY)
-            if vec is None:
-                return None
-            accepted, norm_kept, kept_span = vec
-            accepted = accepted & text_ok
-            # drop blocks of spans the media/empty masks just rejected
-            # (vec_trivial classified every value, media text included)
-            norm_kept, ks, within = filter_blocks(
-                norm_kept, kept_span, accepted)
-            py_mask = text_ok & ~accepted
-            py_idx = np.flatnonzero(py_mask)
-            p_row: list[int] = []
-            p_inner: list[int] = []
-            p_kind: list[str] = []
-            p_text: list[str | None] = []
-            p_ref: list[str | None] = []
-            if len(py_idx):
-                for j, html in zip(
-                        py_idx,
-                        pc.take(tvc, pa.array(py_idx)).to_pylist()):
-                    try:
-                        res = extract_html(
-                            html,
-                            max_link_density=_EXPLODED_MAX_LINK_DENSITY,
-                            min_words=_EXPLODED_MIN_WORDS,
-                            fragment_context=fragment_context)
-                        for i, (k, t, m) in enumerate(res):
-                            p_row.append(int(j))
-                            p_inner.append(i)
-                            p_kind.append(k)
-                            p_text.append(t)
-                            p_ref.append(m)
-                    except Exception as exc:  # noqa: BLE001 — poison pill
-                        p_row.append(int(j))
-                        p_inner.append(0)
-                        p_kind.append(QUARANTINE_KIND)
-                        p_text.append(f"{type(exc).__name__}:{exc}"[:512])
-                        p_ref.append(None)
-
-            jm = np.flatnonzero(media)
-            jm_pa = pa.array(jm)
-            nm, nv = len(jm), len(ks)
-            row_sel = np.concatenate(
-                [jm, ks, np.asarray(p_row, dtype=np.int64)])
-            row_sel_pa = pa.array(row_sel)
-            str_ty = pa.string()
-            text_col = pa.concat_arrays([
-                pc.take(tvc, jm_pa).cast(str_ty),
-                norm_kept.cast(str_ty),
-                pa.array(p_text, str_ty)])
-            ref_col = pa.concat_arrays([
-                pc.take(rb.column(5), jm_pa).cast(str_ty),
-                pa.nulls(nv, str_ty),
-                pa.array(p_ref, str_ty)])
-            kind_col = pa.array(["media"] * nm + ["text"] * nv + p_kind,
-                                str_ty)
-            inner_col = pa.array(np.concatenate([
-                np.zeros(nm, np.int64), within,
-                np.asarray(p_inner, dtype=np.int64)]).astype(np.int32),
-                pa.int32())
-            return pa.RecordBatch.from_arrays(
-                [pc.take(rb.column(0), row_sel_pa).cast(str_ty),
-                 pc.take(rb.column(1), row_sel_pa).cast(pa.int32()),
-                 pc.take(rb.column(2), row_sel_pa).cast(pa.int32()),
-                 inner_col, kind_col, text_col, ref_col],
-                names=["doc_id", "offset", "_chunk", "_inner", "kind",
-                       "text", "media_ref"])
-
-        str_t, int_t = pa.string(), pa.int32()
         for rb in batches:
-            if vec_enabled:
-                out = vec_batch(rb)
-                if out is not None:
-                    yield out
-                    continue
-            doc_ids: list[str] = []
-            offsets: list[int] = []
-            chunks: list[int] = []
-            inners: list[int] = []
-            kinds: list[str] = []
-            texts: list[str | None] = []
-            refs: list[str | None] = []
-            for doc_id, offset, chunk, kind, html, ref in zip(
-                    rb.column(0).to_pylist(), rb.column(1).to_pylist(),
-                    rb.column(2).to_pylist(), rb.column(3).to_pylist(),
-                    rb.column(4).to_pylist(), rb.column(5).to_pylist()):
-                if kind == "media":
-                    if isinstance(html, (bytes, bytearray)):
-                        html = bytes(html).decode("utf-8", "replace")
-                    doc_ids.append(doc_id)
-                    offsets.append(offset)
-                    chunks.append(chunk)
-                    inners.append(0)
-                    kinds.append("media")
-                    texts.append(html)
-                    refs.append(ref)
-                    continue
-                if not html:
-                    continue
-                try:
-                    for i, (k, t, m) in enumerate(extract_html(
-                            html,
-                            max_link_density=_EXPLODED_MAX_LINK_DENSITY,
-                            min_words=_EXPLODED_MIN_WORDS,
-                            fragment_context=fragment_context)):
-                        doc_ids.append(doc_id)
-                        offsets.append(offset)
-                        chunks.append(chunk)
-                        inners.append(i)
-                        kinds.append(k)
-                        texts.append(t)
-                        refs.append(m)
-                except Exception as exc:  # noqa: BLE001 — poison pill
-                    doc_ids.append(doc_id)
-                    offsets.append(offset)
-                    chunks.append(chunk)
-                    inners.append(0)
-                    kinds.append(QUARANTINE_KIND)
-                    texts.append(f"{type(exc).__name__}:{exc}"[:512])
-                    refs.append(None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, str_t), pa.array(offsets, int_t),
-                 pa.array(chunks, int_t), pa.array(inners, int_t),
-                 pa.array(kinds, str_t), pa.array(texts, str_t),
-                 pa.array(refs, str_t)],
-                names=["doc_id", "offset", "_chunk", "_inner", "kind",
-                       "text", "media_ref"])
+            yield _exploded_batch(rb, fragment_context=fragment_context)
 
     # explicit projection pins the positional column order the Arrow UDF
     # reads AND guarantees only these six columns cross the boundary
     # (guide §4.1: an opaque function otherwise ships every column)
     narrow = df_exploded.select(
         "doc_id", "offset", "_chunk", "kind", "text", "media_ref")
-    extracted = narrow.mapInArrow(process, schema=_EXPLODED_MID_SCHEMA)
+    extracted = narrow.mapInArrow(
+        process, schema="doc_id string, offset int, _chunk int, "
+                        "_inner int, kind string, text string, "
+                        "media_ref string")
     w = Window.partitionBy("doc_id").orderBy("offset", "_chunk", "_inner")
     return (
         extracted

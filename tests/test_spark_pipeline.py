@@ -190,19 +190,3 @@ def test_binary_input_pipeline(spark):
     assert got[("d1", 1)] == ("media", None, "m://1")
     assert got[("d2", 0)] == ("text", "utf16 doc", None)
     assert got[("d3", 0)] == ("text", "plain utf-8 é", None)
-
-
-def test_memoized_extraction_identical(spark):
-    """memoize_spans is a pure-function cache: byte-identical output on
-    a corpus with heavily repeated spans (the boilerplate case)."""
-    from pyspark.sql import functions as F
-
-    from html_qt_spark.operators.extract import extract_spans_doc
-    from html_qt_spark.sources.interleaved import interleaved_nested
-
-    nested = interleaved_nested(spark, "/root/testdata/sf0.001", 3)
-    plain = extract_spans_doc(nested)
-    memo = extract_spans_doc(nested, memoize_spans=4096)
-    assert plain.count() == memo.count()
-    assert (plain.exceptAll(memo).count() == 0
-            and memo.exceptAll(plain).count() == 0)
