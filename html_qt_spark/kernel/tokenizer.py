@@ -78,7 +78,6 @@ _EMIT_SLOW_NAMES = (RCDATA_ELEMENTS | RAWTEXT_ELEMENTS
 _DATA_RX = re.compile(r"[&<\x00]")
 _RCDATA_RX = re.compile(r"[&<\x00]")
 _RAWTEXT_RX = re.compile(r"[<\x00]")
-_PLAINTEXT_RX = re.compile(r"\x00")
 _TAG_NAME_RUN = re.compile(r"[^\t\n\f />\x00]+")
 _ATTR_NAME_RUN = re.compile(r"[^\t\n\f /=>\x00\"'<]+")
 _ATTR_DQ_RUN = re.compile(r"[^\"&\x00]+")

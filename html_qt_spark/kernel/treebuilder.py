@@ -37,11 +37,6 @@ from .tokenizer import (
 
 # -------------------------------------------------------------- categories
 
-VOID_ELEMENTS = frozenset(
-    "area base basefont bgsound br col embed hr img input keygen link menuitem "
-    "meta param source track wbr".split()
-)
-
 FORMATTING = frozenset(
     "a b big code em font i nobr s small strike strong tt u".split()
 )

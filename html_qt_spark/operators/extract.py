@@ -23,18 +23,23 @@ Doc mode groups spans by document, exploded mode makes every row its own
 group.  Python runs only for the residue the RE2 batch classifier
 (kernel/trivialbatch.py) cannot settle — no per-row Python UDFs
 (input_hint mandate).
+
+The three one-row-per-document operators (``extract_markdown_doc``,
+``doc_parse_stats``, ``doc_metadata``) share ONE per-document Arrow
+frame, :func:`_per_doc_batch`: it hands each document's span lists to
+a plain Python function (binary text already decoded, a null span list
+as None) and builds the output batch from the rows it returns, so each
+operator is only its per-document rule.  All four document operators
+read their input through one projection, :func:`_span_lists`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-OUT_FIELDS = "doc_id string, span_idx int, kind string, text string, media_ref string, offset int"
 
 OUT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -47,6 +52,27 @@ OUT_SCHEMA = T.StructType([
 
 
 QUARANTINE_KIND = "__quarantine__"
+
+
+def _span_lists(df: DataFrame, *, offsets: bool = False) -> DataFrame:
+    """(doc_id, spans) -> (doc_id, _kinds, _texts, _refs[, _offsets]).
+
+    Flatten array<struct> into parallel primitive list columns BEFORE the
+    Arrow boundary: Arrow conversion of array<struct> builds one Python
+    dict per span (measured ~2.5x the whole kernel cost); primitive list
+    columns convert as flat buffers.  JVM-side projection, zero
+    shuffles.  All columns come from one array, so their list offsets
+    and nulls always agree.
+    """
+    cols = [
+        "doc_id",
+        F.col("spans.kind").alias("_kinds"),
+        F.col("spans.text").alias("_texts"),
+        F.col("spans.media_ref").alias("_refs"),
+    ]
+    if offsets:
+        cols.append(F.col("spans.offset").alias("_offsets"))
+    return df.select(*cols)
 
 
 def extract_span_batch(kind, text, media_ref, group, *,
@@ -252,22 +278,105 @@ def extract_spans_doc(df: DataFrame, *, reference_compat: bool = False,
                              fragment_context=fragment_context,
                              max_span_bytes=max_span_bytes)
 
-    # Flatten array<struct> into four parallel primitive arrays BEFORE the
-    # Arrow boundary: Arrow conversion of array<struct> builds one Python
-    # dict per span (measured ~2.5x the whole kernel cost); four primitive
-    # list columns convert as flat buffers.  JVM-side projection, still
-    # zero shuffles.  All four come from one array, so their list
-    # offsets and nulls always agree.  mapInArrow (not mapInPandas): the
-    # batch core works on the Arrow arrays themselves, so a pandas layer
-    # would be pure overhead on both sides of the boundary.
-    flat = df.select(
-        "doc_id",
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-        F.col("spans.media_ref").alias("_refs"),
-        F.col("spans.offset").alias("_offsets"),
-    )
-    return flat.mapInArrow(process, schema=OUT_SCHEMA)
+    # mapInArrow: the batch core works on the Arrow arrays themselves, so
+    # no per-row conversion runs on either side of the boundary
+    return _span_lists(df, offsets=True).mapInArrow(process,
+                                                    schema=OUT_SCHEMA)
+
+
+def _per_doc_batch(rb, fn, schema: T.StructType):
+    """One (doc_id, kinds, texts, refs) batch -> ``schema`` rows.
+
+    ``fn(kinds, texts, refs)`` sees one document's span lists as Python
+    lists — a null span list as None, binary text decoded once through
+    kernel/encoding.py::decode_html — and returns the row's values
+    after doc_id, or None for no row.
+    """
+    import pyarrow as pa
+
+    from html_qt_spark.kernel.encoding import decode_html
+
+    doc_id, kinds, texts, refs = rb.columns
+    binary = pa.types.is_binary(texts.type.value_type)
+    rows = []
+    for d, k, t, r in zip(doc_id.to_pylist(), kinds.to_pylist(),
+                          texts.to_pylist(), refs.to_pylist()):
+        if binary and t is not None:
+            t = [None if v is None else decode_html(v) for v in t]
+        row = fn(k, t, r)
+        if row is not None:
+            rows.append((d, *row))
+    arrow_type = {"string": pa.string(), "int": pa.int32(),
+                  "boolean": pa.bool_()}
+    out = pa.schema([(f.name, arrow_type[f.dataType.simpleString()])
+                     for f in schema])
+    return pa.RecordBatch.from_arrays(
+        [pa.array([row[i] for row in rows], f.type)
+         for i, f in enumerate(out)], schema=out)
+
+
+def _per_doc(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """(doc_id, spans) -> one ``schema`` row per document ``fn`` keeps
+    (:func:`_per_doc_batch`): narrow mapInArrow, zero shuffles."""
+
+    def process(batches):
+        for rb in batches:
+            yield _per_doc_batch(rb, fn, schema)
+
+    return _span_lists(df).mapInArrow(process, schema=schema)
+
+
+MARKDOWN_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("markdown", T.StringType()),
+    T.StructField("n_segments", T.IntegerType()),
+    T.StructField("quarantined", T.BooleanType()),
+])
+
+
+def _markdown_doc(kinds, texts, refs, *, max_span_bytes: int | None = None):
+    """One document -> (markdown, n_segments, quarantined); no row for a
+    null span list.  A text span longer than ``max_span_bytes``
+    codepoints or a kernel exception quarantines the document: the
+    markdown is the failure message, n_segments 0."""
+    if kinds is None:
+        return None
+    from html_qt_spark.kernel.markdown import render_markdown
+    from html_qt_spark.kernel.treebuilder import parse
+
+    blocks: list[str] = []
+    try:
+        for kind, html, ref in zip(kinds, texts, refs):
+            if kind == "media":
+                if ref:
+                    blocks.append(f"![]({ref})")
+                continue
+            if not html:
+                continue
+            if max_span_bytes and len(html) > max_span_bytes:
+                raise ValueError(f"oversize-span:{len(html)}")
+            md = render_markdown(parse(html))
+            if md:
+                blocks.append(md)
+    except Exception as exc:  # noqa: BLE001 — poison pill
+        return f"{type(exc).__name__}:{exc}"[:512], 0, True
+    return "\n\n".join(blocks), len(blocks), False
+
+
+def extract_markdown_doc(df: DataFrame, *,
+                         max_span_bytes: int | None = None) -> DataFrame:
+    """(doc_id, spans) → (doc_id, markdown, n_segments, quarantined):
+    the structure-preserving Markdown rendering of each document
+    (kernel/markdown.py spec) — headings, lists, tables, code fences,
+    links/images — with media spans interleaved at their document
+    position as image/link blocks.
+
+    Narrow mapInArrow through the per-document frame, zero shuffle,
+    document-level poison-pill quarantine (:func:`_markdown_doc`).  One
+    output row per document with a non-null span list.
+    """
+    return _per_doc(df, functools.partial(
+        _markdown_doc, max_span_bytes=max_span_bytes), MARKDOWN_SCHEMA)
 
 
 DOC_STATS_SCHEMA = T.StructType([
@@ -284,143 +393,38 @@ DOC_STATS_SCHEMA = T.StructType([
 ])
 
 
-MARKDOWN_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("markdown", T.StringType()),
-    T.StructField("n_segments", T.IntegerType()),
-    T.StructField("quarantined", T.BooleanType()),
-])
+def _parse_stats_doc(kinds, texts, refs):
+    """One document -> (n_text_spans_in, n_media_spans_in, n_tokens,
+    n_nodes, n_parse_errors, error_codes).  A span whose tokenizer or
+    tree builder raises adds no tokens or nodes, one parse error and
+    the code ``exception:<ExcType>``."""
+    from html_qt_spark.kernel.tokenizer import HTMLTokenizer
+    from html_qt_spark.kernel.treebuilder import TreeBuilder
 
-
-_MD_SPAN_SCHEMA = T.StructType([
-    T.StructField("md", T.StringType()),
-    T.StructField("err", T.StringType()),
-])
-
-
-@F.pandas_udf(_MD_SPAN_SCHEMA)
-def _md_span(html: pd.Series) -> pd.DataFrame:
-    """One HTML span → (markdown, err) — Arrow-batched, per-span
-    poison-pill (err carries the quarantine message)."""
-    from html_qt_spark.kernel.markdown import render_markdown
-    from html_qt_spark.kernel.treebuilder import parse
-
-    mds: list[str | None] = []
-    errs: list[str | None] = []
-    for doc in html:
-        if not doc:
-            mds.append(None)
-            errs.append(None)
+    n_text = n_media = n_tokens = n_nodes = n_errs = 0
+    codes: set[str] = set()
+    for kind, html in zip(kinds or (), texts or ()):
+        if kind == "media":
+            n_media += 1
+            continue
+        n_text += 1
+        if not html:
             continue
         try:
-            mds.append(render_markdown(parse(doc)))
-            errs.append(None)
+            tokens, errors = HTMLTokenizer(html).run()
+            tb = TreeBuilder(collect_errors=True)
+            tb.process(tokens)
         except Exception as exc:  # noqa: BLE001 — poison pill
-            mds.append(None)
-            errs.append(f"{type(exc).__name__}:{exc}"[:512])
-    return pd.DataFrame({"md": mds, "err": errs})
-
-
-def extract_markdown_exploded(df_exploded: DataFrame) -> DataFrame:
-    """Skew path for Markdown rendering over the exploded span table
-    (doc_id, offset, kind, text, media_ref): per-span rendering in a
-    narrow pandas_udf, then ONE groupBy(doc_id) shuffle reassembles the
-    document in offset order — same output contract as
-    :func:`extract_markdown_doc` (equality pinned by
-    tests/test_markdown.py).  Mega-documents parallelize across spans;
-    a quarantined span quarantines its document (first failing span's
-    message wins, n_segments=0), matching the doc-mode poison pill.
-    """
-    r = df_exploded.withColumn("_r", _md_span("text"))
-    block = (F.when(F.col("kind") == "media",
-                    F.when(F.col("media_ref").isNotNull(),
-                           F.concat(F.lit("![]("), "media_ref",
-                                    F.lit(")"))))
-             .otherwise(F.col("_r.md")))
-    rows = r.select(
-        "doc_id", "offset",
-        block.alias("_block"),
-        F.col("_r.err").alias("_err"))
-    agg = (rows.groupBy("doc_id")
-           .agg(F.min(F.when(F.col("_err").isNotNull(),
-                             F.struct("offset", "_err"))).alias("_q"),
-                F.sort_array(F.collect_list(
-                    F.when(F.col("_block").isNotNull()
-                           & (F.col("_block") != ""),
-                           F.struct("offset", "_block")))).alias("_bs")))
-    quarantined = F.col("_q").isNotNull()
-    return agg.select(
-        "doc_id",
-        F.when(quarantined, F.col("_q._err"))
-        .otherwise(F.concat_ws("\n\n", F.col("_bs._block")))
-        .alias("markdown"),
-        F.when(quarantined, F.lit(0))
-        .otherwise(F.size("_bs")).cast("int").alias("n_segments"),
-        quarantined.alias("quarantined"))
-
-
-def extract_markdown_doc(df: DataFrame, *,
-                         max_span_bytes: int | None = None) -> DataFrame:
-    """(doc_id, spans) → (doc_id, markdown, n_segments, quarantined):
-    the structure-preserving Markdown rendering of each document
-    (kernel/markdown.py spec) — headings, lists, tables, code fences,
-    links/images — with media spans interleaved at their document
-    position as image/link blocks.
-
-    Same execution shape as :func:`extract_spans_doc`: narrow
-    mapInPandas over four flattened primitive arrays, zero shuffle,
-    document-level poison-pill quarantine.  One output row per document.
-    """
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from html_qt_spark.kernel.markdown import render_markdown
-        from html_qt_spark.kernel.treebuilder import parse
-
-        for pdf in batches:
-            doc_ids: list[str] = []
-            mds: list[str | None] = []
-            n_segments: list[int] = []
-            quarantined: list[bool] = []
-            for doc_id, s_kinds, s_texts, s_refs in zip(
-                    pdf["doc_id"], pdf["_kinds"], pdf["_texts"],
-                    pdf["_refs"]):
-                if s_kinds is None:
-                    continue
-                blocks: list[str] = []
-                try:
-                    for kind, html, ref in zip(s_kinds, s_texts, s_refs):
-                        if kind == "media":
-                            if ref:
-                                blocks.append(f"![]({ref})")
-                            continue
-                        if not html:
-                            continue
-                        if max_span_bytes and len(html) > max_span_bytes:
-                            raise ValueError(f"oversize-span:{len(html)}")
-                        md = render_markdown(parse(html))
-                        if md:
-                            blocks.append(md)
-                    doc_ids.append(doc_id)
-                    mds.append("\n\n".join(blocks))
-                    n_segments.append(len(blocks))
-                    quarantined.append(False)
-                except Exception as exc:  # noqa: BLE001 — poison pill
-                    doc_ids.append(doc_id)
-                    mds.append(f"{type(exc).__name__}:{exc}"[:512])
-                    n_segments.append(0)
-                    quarantined.append(True)
-            yield pd.DataFrame({
-                "doc_id": doc_ids, "markdown": mds,
-                "n_segments": n_segments, "quarantined": quarantined,
-            })
-
-    flat = df.select(
-        "doc_id",
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-        F.col("spans.media_ref").alias("_refs"),
-    )
-    return flat.mapInPandas(process, schema=MARKDOWN_SCHEMA)
+            n_errs += 1
+            codes.add(f"exception:{type(exc).__name__}")
+            continue
+        n_tokens += len(tokens)
+        n_nodes += len(tb.tag) - 1
+        n_errs += len(errors) + len(tb.errors)
+        codes.update(c for c, _ in errors)
+        codes.update(tb.errors)
+    return (n_text, n_media, n_tokens, n_nodes, n_errs,
+            "|".join(sorted(codes)))
 
 
 def doc_parse_stats(df: DataFrame) -> DataFrame:
@@ -429,60 +433,11 @@ def doc_parse_stats(df: DataFrame) -> DataFrame:
     The reference records errors as ParserErrorToken rows interleaved in
     the token stream (html-qt/htmltokenizer.cpp:94-101); the engine
     surfaces them as a metrics table instead (SURVEY.md §2.2): token
-    count, DOM node count, parse-error count + distinct codes per doc.
-    Narrow map, same zero-shuffle shape as extraction.
+    count, DOM node count, parse-error count + distinct codes per doc
+    (:func:`_parse_stats_doc`).  One row per input document, through the
+    same zero-shuffle per-document frame as Markdown.
     """
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from html_qt_spark.kernel.tokenizer import HTMLTokenizer
-        from html_qt_spark.kernel.treebuilder import TreeBuilder
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_text_spans_in",
-                                    "n_media_spans_in", "n_tokens",
-                                    "n_nodes", "n_parse_errors",
-                                    "error_codes")}
-            for doc_id, s_kinds, s_texts in zip(
-                    pdf["doc_id"], pdf["_kinds"], pdf["_texts"]):
-                n_text = n_media = n_tokens = n_nodes = 0
-                codes: set[str] = set()
-                n_errs = 0
-                if s_kinds is not None:
-                    for kind, html in zip(s_kinds, s_texts):
-                        if kind == "media":
-                            n_media += 1
-                            continue
-                        n_text += 1
-                        if not html:
-                            continue
-                        if isinstance(html, (bytes, bytearray)):
-                            from html_qt_spark.kernel.encoding import (
-                                decode_html)
-                            html = decode_html(bytes(html))
-                        tk = HTMLTokenizer(html)
-                        tokens, errors = tk.run()
-                        n_tokens += len(tokens)
-                        tb = TreeBuilder(collect_errors=True)
-                        tb.process(tokens)
-                        n_nodes += len(tb.tag) - 1
-                        n_errs += len(errors) + len(tb.errors)
-                        codes.update(c for c, _ in errors)
-                        codes.update(tb.errors)
-                rows["doc_id"].append(doc_id)
-                rows["n_text_spans_in"].append(n_text)
-                rows["n_media_spans_in"].append(n_media)
-                rows["n_tokens"].append(n_tokens)
-                rows["n_nodes"].append(n_nodes)
-                rows["n_parse_errors"].append(n_errs)
-                rows["error_codes"].append("|".join(sorted(codes)))
-            yield pd.DataFrame(rows)
-
-    flat = df.select(
-        "doc_id",
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-    )
-    return flat.mapInPandas(process, schema=DOC_STATS_SCHEMA)
+    return _per_doc(df, _parse_stats_doc, DOC_STATS_SCHEMA)
 
 
 # block-start tags are safe HTML cut points for the extractor: a block tag
@@ -627,51 +582,31 @@ DOC_META_SCHEMA = T.StructType([
 ])
 
 
+def _metadata_doc(kinds, texts, refs):
+    """One document -> (title, meta_description, canonical_url, lang),
+    the first non-null value across its text spans winning; a span the
+    kernel fails on is skipped."""
+    from html_qt_spark.kernel.extractor import extract_metadata
+    from html_qt_spark.kernel.treebuilder import parse
+
+    acc = (None, None, None, None)
+    for kind, html in zip(kinds or (), texts or ()):
+        if kind == "media" or not html:
+            continue
+        if None not in acc:
+            break
+        try:
+            got = extract_metadata(parse(html, collect_errors=False))
+        except Exception:  # noqa: BLE001 — poison pill
+            continue
+        acc = tuple(g if a is None else a for a, g in zip(acc, got))
+    return acc
+
+
 def doc_metadata(df: DataFrame) -> DataFrame:
     """(doc_id, spans) -> per-document head metadata (title, meta
     description, canonical link, html lang), first occurrence across the
-    document's text spans winning.  Same zero-shuffle narrow-map shape
-    as extraction; one row per input document (all-NULL when the
-    document carries no head metadata)."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from html_qt_spark.kernel.encoding import decode_html
-        from html_qt_spark.kernel.extractor import extract_metadata
-        from html_qt_spark.kernel.treebuilder import parse
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "title", "meta_description",
-                                    "canonical_url", "lang")}
-            for doc_id, s_kinds, s_texts in zip(
-                    pdf["doc_id"], pdf["_kinds"], pdf["_texts"]):
-                title = desc = canon = lang = None
-                if s_kinds is not None:
-                    for kind, html in zip(s_kinds, s_texts):
-                        if kind == "media" or not html:
-                            continue
-                        if None not in (title, desc, canon, lang):
-                            break
-                        if isinstance(html, (bytes, bytearray)):
-                            html = decode_html(bytes(html))
-                        try:
-                            t, d, c, lg = extract_metadata(parse(
-                                html, collect_errors=False))
-                        except Exception:  # noqa: BLE001 — poison pill
-                            continue
-                        title = title if title is not None else t
-                        desc = desc if desc is not None else d
-                        canon = canon if canon is not None else c
-                        lang = lang if lang is not None else lg
-                rows["doc_id"].append(doc_id)
-                rows["title"].append(title)
-                rows["meta_description"].append(desc)
-                rows["canonical_url"].append(canon)
-                rows["lang"].append(lang)
-            yield pd.DataFrame(rows)
-
-    flat = df.select(
-        "doc_id",
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-    )
-    return flat.mapInPandas(process, schema=DOC_META_SCHEMA)
+    document's text spans winning (:func:`_metadata_doc`).  Same
+    zero-shuffle per-document frame as Markdown; one row per input
+    document (all-NULL when the document carries no head metadata)."""
+    return _per_doc(df, _metadata_doc, DOC_META_SCHEMA)

@@ -51,8 +51,12 @@ def get_spark(app: str = "html_qt_spark", *, cpus: int | None = None,
     - shuffle.partitions sized to cores (not the 200 default) so the
       window/groupBy stages don't fragment at small scale; at cluster
       scale this is set to 2-3x total cores by the submitter.
+    - driver memory from env SPARK_GRAFT_DRIVER_MEM, else the smaller of
+      48 GB and half of physical memory: a local JVM sized past the
+      host's RAM is OOM-killed instead of collecting garbage.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = SparkSession.builder
     # under spark-submit the master (cluster URL) comes from the submitter;
     # only force local[N] when launched as a bare python process
@@ -72,7 +76,8 @@ def get_spark(app: str = "html_qt_spark", *, cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or f"{min(48 << 10, phys_mb // 2)}m")
     )
     if iceberg_warehouse:
         # real Iceberg catalog when the runtime jar exists (detected at

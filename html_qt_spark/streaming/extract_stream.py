@@ -4,7 +4,7 @@ The reference is a batch parser (whole-string input, cmd/main.cpp:55) and
 the north_rule pipeline is batch-over-Iceberg, but a crawl feed is
 naturally a stream: this module exposes the same extraction as an
 incremental job — file-source stream of interleaved documents →
-mapInPandas extraction (stateless, so it streams without watermarks) →
+mapInArrow extraction (stateless, so it streams without watermarks) →
 parquet sink with exactly-once checkpointing.
 
 Resume story mirrors the batch job: the streaming checkpoint directory

@@ -130,24 +130,35 @@ def test_extract_markdown_doc_operator(spark):
     assert "about" not in r.markdown
 
 
-def test_markdown_exploded_matches_doc_mode(spark):
-    """The skew path (per-span render + one reassembly shuffle) must be
-    row-identical to the doc-at-a-time path."""
-    from html_qt_spark.operators.extract import (
-        extract_markdown_doc,
-        extract_markdown_exploded,
-    )
-    from html_qt_spark.sources.interleaved import (
-        interleaved_exploded,
-        interleaved_nested,
-    )
+def test_markdown_doc_binary_text_matches_string(spark):
+    """BinaryType span text is decoded, not quarantined: the same
+    document as StringType and as BinaryType gives the same row."""
+    from pyspark.sql import types as T
 
-    sf = "/root/testdata/sf0.001"
-    doc = extract_markdown_doc(interleaved_nested(spark, sf))
-    exp = extract_markdown_exploded(interleaved_exploded(spark, sf))
-    assert doc.count() == exp.count() == 500
-    assert (doc.exceptAll(exp).count() == 0
-            and exp.exceptAll(doc).count() == 0)
+    from html_qt_spark.operators.extract import extract_markdown_doc
+
+    html = "<h1>Titre</h1><p>café &amp; crème</p>"
+
+    def nested(text_type, text):
+        schema = T.StructType([
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("spans", T.ArrayType(T.StructType([
+                T.StructField("kind", T.StringType()),
+                T.StructField("text", text_type),
+                T.StructField("media_ref", T.StringType()),
+                T.StructField("offset", T.IntegerType()),
+            ]))),
+        ])
+        return spark.createDataFrame([
+            ("d", [("text", text, None, 0), ("media", None, "img://1", 1)]),
+        ], schema=schema)
+
+    as_str = extract_markdown_doc(nested(T.StringType(), html)).collect()
+    as_bin = extract_markdown_doc(
+        nested(T.BinaryType(), bytearray(html.encode("utf-8")))).collect()
+    assert as_str == as_bin
+    assert len(as_bin) == 1 and not as_bin[0].quarantined
+    assert as_bin[0].markdown == "# Titre\n\ncafé & crème\n\n![](img://1)"
 
 
 def test_markdown_doc_quarantine_on_oversize(spark):
