@@ -12,14 +12,14 @@ jusText (Pomikálek 2011) ideas in a deterministic, fixture-pinnable form:
    nav/header/footer/aside).
 2. Group text by nearest block-level ancestor -> text blocks.
 3. Score each block: word count + link density (words under <a>).
-4. Keep blocks with ``link_density <= max_link_density`` and
-   ``n_words >= min_words``; drop the rest as boilerplate.
+4. Keep blocks with ``link_density <= MAX_LINK_DENSITY`` and
+   ``n_words >= MIN_WORDS``; drop the rest as boilerplate.
 5. Media elements (img/video/audio/embed/source with a source ref) emit
    ``kind='media'`` spans at their document position, so text and media
    interleave in source order.
 
-All thresholds are explicit keyword parameters so golden fixtures stay
-stable (FIXTURES.md §5).
+The thresholds are the module constants below; the golden fixtures
+(FIXTURES.md §5) are pinned to them.
 """
 
 from __future__ import annotations
@@ -27,6 +27,11 @@ from __future__ import annotations
 import re
 
 from .treebuilder import TreeBuilder, parse
+
+# a kept block has at least MIN_WORDS words and at most MAX_LINK_DENSITY
+# of them under <a>
+MIN_WORDS = 1
+MAX_LINK_DENSITY = 0.5
 
 # subtrees that never contribute extractable content
 SKIP_SUBTREES = frozenset(
@@ -88,10 +93,6 @@ def _norm(text: str) -> str:
 
 def extract_spans(
     tb: TreeBuilder,
-    *,
-    max_link_density: float = 0.5,
-    min_words: int = 1,
-    keep_boilerplate_containers: bool = False,
 ) -> list[tuple[str, str | None, str | None]]:
     """DOM arrays -> ordered list of (kind, text, media_ref) spans.
 
@@ -119,15 +120,15 @@ def extract_spans(
         cls = cls_get(tag[nid], 0)
         if cls:
             if cls & _C_TEXT:
-                if boiler_depth == 0 or keep_boilerplate_containers:
+                if boiler_depth == 0:
                     if block_id != cur_block:
                         # flush: previous block ended
                         if cur_parts:
                             block_text = _norm("".join(cur_parts))
-                            if block_text and cur_words >= min_words \
+                            if block_text and cur_words >= MIN_WORDS \
                                     and (cur_link_words
                                          / (cur_words or 1)
-                                         <= max_link_density):
+                                         <= MAX_LINK_DENSITY):
                                 spans.append(("text", block_text, None))
                             cur_parts = []
                             cur_link_words = 0
@@ -146,16 +147,15 @@ def extract_spans(
                 t = tag[nid]
                 ref = next((v for k, v in (attrs[nid] or [])
                             if k == MEDIA_TAGS[t]), None)
-                if ref and (boiler_depth == 0
-                            or keep_boilerplate_containers):
+                if ref and boiler_depth == 0:
                     alt = next((v for k, v in (attrs[nid] or [])
                                 if k == "alt"), None)
                     # flush, then emit the media span at its position
                     if cur_parts:
                         block_text = _norm("".join(cur_parts))
-                        if block_text and cur_words >= min_words \
+                        if block_text and cur_words >= MIN_WORDS \
                                 and (cur_link_words / (cur_words or 1)
-                                     <= max_link_density):
+                                     <= MAX_LINK_DENSITY):
                             spans.append(("text", block_text, None))
                         cur_parts = []
                         cur_link_words = 0
@@ -177,9 +177,9 @@ def extract_spans(
                 # tests/oracle.py)
                 if cur_parts:
                     block_text = _norm("".join(cur_parts))
-                    if block_text and cur_words >= min_words \
+                    if block_text and cur_words >= MIN_WORDS \
                             and (cur_link_words / (cur_words or 1)
-                                 <= max_link_density):
+                                 <= MAX_LINK_DENSITY):
                         spans.append(("text", block_text, None))
                     cur_parts = []
                     cur_link_words = 0
@@ -195,8 +195,8 @@ def extract_spans(
     # final flush
     if cur_parts:
         block_text = _norm("".join(cur_parts))
-        if block_text and cur_words >= min_words \
-                and (cur_link_words / (cur_words or 1) <= max_link_density):
+        if block_text and cur_words >= MIN_WORDS \
+                and (cur_link_words / (cur_words or 1) <= MAX_LINK_DENSITY):
             spans.append(("text", block_text, None))
     return spans
 
@@ -246,53 +246,27 @@ def extract_metadata(tb: TreeBuilder) -> tuple[str | None, str | None,
     return title, description, canonical, lang
 
 
-_fast_extract = None
-_trivial_extract = None
-
-
 def extract_html(
     html_text: str | bytes,
     *,
     reference_compat: bool = False,
-    max_link_density: float = 0.5,
-    min_words: int = 1,
     fragment_context: str | None = None,
 ) -> list[tuple[str, str | None, str | None]]:
     """One-shot: HTML string OR raw bytes -> ordered (kind, text,
-    media_ref) spans.
+    media_ref) spans: decode, ``parse`` (or ``parse_fragment``), then
+    ``extract_spans``.
 
     Bytes go through WHATWG encoding sniffing (BOM + meta prescan,
     kernel/encoding.py) — the north_star ingests "raw HTML bytes"; the
     reference never decodes (QString in, htmltokenizer.cpp:48-54).
-    This is the fused tokenize+build+extract path the Spark UDF batches
-    (engine equivalent of HTMLParser::parse, html-qt/htmlparser.cpp:51-58,
-    plus the span sink the reference lacks)."""
+    This is the residue path behind the Spark operators' RE2 batch
+    classifier (kernel/trivialbatch.py); ``parse`` keeps its own fast
+    path for simple fragments (kernel/fastparse.py::try_fast_parse).
+    Engine equivalent of HTMLParser::parse (html-qt/htmlparser.cpp:51-58)
+    plus the span sink the reference lacks."""
     if isinstance(html_text, (bytes, bytearray, memoryview)):
         from .encoding import decode_html
         html_text = decode_html(bytes(html_text))
-    if fragment_context is None and not reference_compat:
-        # trivial path first: flat single-level fragments resolve with
-        # one C-level regex fullmatch + a 2-4 event pass
-        # (trivialspans.py docstring); rejection is one linear scan
-        global _fast_extract, _trivial_extract
-        if _trivial_extract is None:
-            from .trivialspans import trivial_extract as _trivial_extract  # noqa: PLW0603
-        spans = _trivial_extract(html_text,
-                                 max_link_density=max_link_density,
-                                 min_words=min_words)
-        if spans is not None:
-            return spans
-        # streaming fast path: same restricted grammar as the fast
-        # parser, but extraction state runs inline during the scan so no
-        # DOM is materialized at all; bails to the full pipeline on
-        # anything outside the grammar (fastparse.py docstring)
-        if _fast_extract is None:
-            from .fastparse import fast_extract as _fast_extract  # noqa: PLW0603
-        spans = _fast_extract(html_text,
-                              max_link_density=max_link_density,
-                              min_words=min_words)
-        if spans is not None:
-            return spans
     if fragment_context is not None:
         # innerHTML semantics: parse as the contents of the context
         # element (a crawl storing table cells / option lists / svg
@@ -304,5 +278,4 @@ def extract_html(
     else:
         tb = parse(html_text, reference_compat=reference_compat,
                    collect_errors=False)
-    return extract_spans(tb, max_link_density=max_link_density,
-                         min_words=min_words)
+    return extract_spans(tb)

@@ -15,11 +15,14 @@ pins fast-vs-full tree equality over the conformance fixture corpus
 plus randomized simple documents.
 
 Only valid with ``collect_errors=False`` (the extraction path): the
-fast path does not record parse errors.
+fast path does not record parse errors.  It is the one fast-grammar
+scanner: ``parse`` tries it first, and ``fast_extract`` (its extraction
+view, kept only for perfbench) is ``extract_spans`` over its tree.
 """
 
 from __future__ import annotations
 
+from .extractor import extract_spans
 from .tokenizer import _CRLF_RX, _FAST_ATTR, _FAST_END, _FAST_START
 from .treebuilder import (
     FORMATTING,
@@ -417,456 +420,13 @@ def try_fast_parse(html_text: str) -> TreeBuilder | None:
     return tb
 
 
-# --------------------------------------------------------------------------
-# Streaming extraction: same fast grammar, no DOM.
-#
-# Extra guard beyond try_fast_parse: tags whose SUBTREES the extractor
-# skips (extractor.SKIP_SUBTREES) but which the tree builder treats as
-# ordinary elements — in-body <noscript> and <datalist> have no special
-# in-body handler, so the grammar guards alone would accept them and
-# the streaming extractor would wrongly emit their text/media (the DOM
-# walk never descends into them).  <head> is also in SKIP_SUBTREES but
-# its in-body start tag is IGNORED (no element, no subtree), so content
-# after it extracts identically either way.  Everything else in
-# SKIP_SUBTREES already bails via _IN_BODY_START.
-#
-# ``fast_extract`` runs the identical scanner/stack machine as
-# ``try_fast_parse`` but never materializes node arrays: because the fast
-# grammar builds its tree strictly append-only in document order (no
-# foster parenting, no AFE reconstruction clones, no adoption-agency
-# reshuffling — all of those bail), the extractor's DFS over the finished
-# tree visits content in exactly the order this scanner encounters it, so
-# the block-assembly state machine of ``extractor.extract_spans`` can run
-# inline.  Equality with extract_spans(parse(html)) is pinned by
-# tests/test_fastparse_differential.py over the conformance fixtures and
-# a large randomized corpus.
+def fast_extract(html_text: str) -> list | None:
+    """(kind, text, media_ref) spans for fast-grammar input, else None.
 
-from .extractor import (  # noqa: E402  (import placed after shared tables)
-    BLOCK_TAGS,
-    BOILERPLATE_CONTAINERS,
-    MEDIA_TAGS,
-    SKIP_SUBTREES,
-    _norm,
-)
-
-_SKIP_ORDINARY = frozenset(
-    t for t in SKIP_SUBTREES
-    if t not in _IN_BODY_START and not t.startswith("#") and t != "head")
-assert _SKIP_ORDINARY == {"noscript", "datalist"}, _SKIP_ORDINARY
-
-
-def fast_extract(html_text: str, *, max_link_density: float = 0.5,
-                 min_words: int = 1) -> list | None:
-    """(kind, text, media_ref) spans for fast-grammar input, else None."""
-    if "&" in html_text or "\x00" in html_text:
-        return None
-    if "\r" in html_text:
-        html_text = _CRLF_RX.sub("\n", html_text)
-    n = len(html_text)
-    m0 = _FAST_START.match(html_text)
-    if m0 is None or m0.group(1).lower() in \
-            TreeBuilder._INITIAL_LADDER_EXCLUDE:
-        return None
-
-    spans: list[tuple[str, str | None, str | None]] = []
-    # stack entries: [name, block_id, is_afe]
-    # scaffolding: html and body are both block containers
-    stack = [["html", 0, False], ["body", 1, False]]
-    next_id = 2
-    link_depth = 0
-    boiler_depth = 0
-    p_open = 0                      # open <p> count (0 or 1 in practice)
-    afe_n: dict[str, int] = {}      # open formatting elements per tag
-    cur_block = -1
-    cur_parts: list[str] = []
-    cur_words = 0
-    cur_link_words = 0
-    # consecutive text runs with no intervening node merge into ONE
-    # #text node in the real tree (ignored tags / no-op end tags between
-    # them), and word counts are per NODE — track the open text tail
-    last_w = 0
-    last_in_link = False
-    text_open = False
-
-    fast_start = _FAST_START.match
-    fast_end = _FAST_END.match
-    find = html_text.find
-
-    def flush() -> None:
-        nonlocal cur_parts, cur_words, cur_link_words, cur_block, text_open
-        if cur_parts:
-            block_text = _norm("".join(cur_parts))
-            if block_text and cur_words >= min_words \
-                    and cur_link_words / (cur_words or 1) \
-                    <= max_link_density:
-                spans.append(("text", block_text, None))
-            cur_parts = []
-            cur_words = 0
-            cur_link_words = 0
-        cur_block = -1
-        text_open = False
-
-    def pop1() -> bool:
-        """Pop top entry, updating counters; False = must bail."""
-        nonlocal link_depth, boiler_depth, text_open, p_open
-        name, _bid, is_afe = stack.pop()
-        if is_afe:
-            return False
-        if name == "p":
-            p_open -= 1
-        elif name == "a":
-            link_depth -= 1  # pragma: no cover — a is always AFE
-        elif name in BOILERPLATE_CONTAINERS:
-            boiler_depth -= 1
-        text_open = False
-        return True
-
-    def pop_fmt() -> None:
-        """Pop a formatting element via its matching end tag."""
-        nonlocal link_depth, text_open
-        name, _bid, _ = stack.pop()
-        if name == "a":
-            link_depth -= 1
-        afe_n[name] -= 1
-        text_open = False
-
-    def push(name: str) -> None:
-        nonlocal next_id, link_depth, boiler_depth, text_open, p_open
-        if name in BLOCK_TAGS:
-            flush()
-            bid = next_id
-        else:
-            bid = stack[-1][1]
-        stack.append([name, bid, False])
-        next_id += 1
-        if name == "p":
-            p_open += 1
-        elif name == "a":
-            link_depth += 1
-        elif name in BOILERPLATE_CONTAINERS:
-            boiler_depth += 1
-        text_open = False
-
-    def visit_void(name: str, attrs) -> None:
-        """DFS effects of a childless, un-pushed element."""
-        nonlocal next_id, text_open
-        next_id += 1
-        text_open = False
-        ref_attr = MEDIA_TAGS.get(name)
-        if ref_attr is not None:
-            ref = next((v for k, v in attrs if k == ref_attr), None)
-            if ref and boiler_depth == 0:
-                alt = next((v for k, v in attrs if k == "alt"), None)
-                flush()
-                spans.append(("media", _norm(alt) if alt else None, ref))
-        if name in BLOCK_TAGS:  # hr: block boundary with empty subtree
-            flush()
-
-    pos = 0
-    while pos < n:
-        lt = find("<", pos)
-        if lt != pos:
-            data = html_text[pos:] if lt == -1 else html_text[pos:lt]
-            if boiler_depth == 0:
-                block_id = stack[-1][1]
-                if text_open:
-                    # merge into the open #text node; words recount
-                    merged = cur_parts[-1] + data
-                    cur_words -= last_w
-                    if last_in_link:
-                        cur_link_words -= last_w
-                    w = len(merged.split())
-                    cur_parts[-1] = merged
-                    cur_words += w
-                    if last_in_link:
-                        cur_link_words += w
-                    last_w = w
-                else:
-                    if block_id != cur_block:
-                        flush()
-                        cur_block = block_id
-                    cur_parts.append(data)
-                    w = len(data.split())
-                    cur_words += w
-                    last_in_link = link_depth > 0
-                    if last_in_link:
-                        cur_link_words += w
-                    last_w = w
-                    text_open = True
-            if lt == -1:
-                break
-            pos = lt
-        if html_text.startswith("/", lt + 1):
-            fm = fast_end(html_text, lt)
-            if fm is None:
-                return None
-            name = fm.group(1).lower()
-            pos = fm.end()
-            if name in _HANDLED_ENDS:
-                if name in _SIMPLE_FORMATTING or name == "a":
-                    if not afe_n.get(name):
-                        continue  # not open: ignored
-                    top = stack[-1]
-                    if top[0] != name or not top[2]:
-                        return None  # non-degenerate adoption agency
-                    pop_fmt()
-                    continue
-                if name == "p":
-                    if not p_open:
-                        # synthesized empty <p>: a block node in the DFS
-                        next_id += 1
-                        text_open = False
-                        flush()
-                        continue
-                    while stack[-1][0] in IMPLIED_END \
-                            and stack[-1][0] != "p":
-                        if not pop1():
-                            return None
-                    while stack[-1][0] != "p":
-                        if not pop1():
-                            return None
-                    if not pop1():
-                        return None
-                    continue
-                if name == "li":
-                    in_scope = False
-                    for e in reversed(stack):
-                        t = e[0]
-                        if t == "li":
-                            in_scope = True
-                            break
-                        if t in _SCOPE_LIST_ITEM:
-                            break
-                    if not in_scope:
-                        continue
-                    while stack[-1][0] in IMPLIED_END \
-                            and stack[-1][0] != "li":
-                        if not pop1():
-                            return None
-                    while stack[-1][0] != "li":
-                        if not pop1():
-                            return None
-                    if not pop1():
-                        return None
-                    continue
-                if name in ("dd", "dt"):
-                    if not any(e[0] == name for e in stack):
-                        continue
-                    while stack[-1][0] in IMPLIED_END \
-                            and stack[-1][0] != name:
-                        if not pop1():
-                            return None
-                    while stack[-1][0] != name:
-                        if not pop1():
-                            return None
-                    if not pop1():
-                        return None
-                    continue
-                if name in _HEADINGS:
-                    found = False
-                    for e in reversed(stack):
-                        t = e[0]
-                        if t in _HEADINGS:
-                            found = True
-                            break
-                        if t in _SCOPE_DEFAULT:
-                            break
-                    if not found:
-                        continue
-                    while stack[-1][0] in IMPLIED_END:
-                        if not pop1():
-                            return None
-                    while stack[-1][0] not in _HEADINGS:
-                        if not pop1():
-                            return None
-                    if not pop1():
-                        return None
-                    continue
-                if name == "br":
-                    visit_void("br", [])
-                    continue
-                # block end
-                if not any(e[0] == name for e in stack):
-                    continue
-                while stack[-1][0] in IMPLIED_END:
-                    if not pop1():
-                        return None
-                while stack[-1][0] != name:
-                    if not pop1():
-                        return None
-                if not pop1():
-                    return None
-                continue
-            if name in _IN_BODY_END:
-                return None
-            # any-other-end-tag walk
-            for i in range(len(stack) - 1, -1, -1):
-                t = stack[i][0]
-                if t == name:
-                    while len(stack) - 1 > i \
-                            and stack[-1][0] in IMPLIED_END \
-                            and stack[-1][0] != name:
-                        if not pop1():
-                            return None
-                    while len(stack) > i:
-                        if not pop1():
-                            return None
-                    break
-                if t in SPECIAL:
-                    break  # ignore
-            continue
-        fm = fast_start(html_text, lt)
-        if fm is None:
-            return None
-        name = fm.group(1).lower()
-        pos = fm.end()
-        handler_known = name in _HANDLED_STARTS
-        if not handler_known and (name in _IN_BODY_START
-                                  or name in _SKIP_ORDINARY):
-            return None
-        blob = fm.group(2)
-        if blob:
-            attrs: list[tuple[str, str]] = []
-            seen = None
-            for am in _FAST_ATTR.finditer(blob):
-                v = am.group(2)
-                if v is None:
-                    v = am.group(3)
-                if v is None:
-                    v = am.group(4)
-                k = am.group(1).lower()
-                if seen is None:
-                    seen = {k}
-                elif k in seen:
-                    continue
-                else:
-                    seen.add(k)
-                attrs.append((k, v if v is not None else ""))
-        else:
-            attrs = []
-        if len(stack) >= MAX_DEPTH - 4:
-            return None  # depth-cap semantics: leave to the full pipeline
-        if not handler_known:
-            # ordinary element; media tags (video/audio) land here
-            if name in MEDIA_TAGS:
-                ref = next((v for k, v in attrs
-                            if k == MEDIA_TAGS[name]), None)
-                if ref and boiler_depth == 0:
-                    alt = next((v for k, v in attrs if k == "alt"), None)
-                    flush()
-                    spans.append(("media", _norm(alt) if alt else None, ref))
-            push(name)
-            continue
-        if name in _IGNORED_STARTS:
-            continue
-        if name in _P_CLOSERS:
-            if p_open:
-                while stack[-1][0] in IMPLIED_END and stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                while stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                if not pop1():
-                    return None
-            push(name)
-            continue
-        if name in _HEADINGS:
-            if p_open:
-                while stack[-1][0] in IMPLIED_END and stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                while stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                if not pop1():
-                    return None
-            if stack[-1][0] in _HEADINGS:
-                if not pop1():
-                    return None
-            push(name)
-            continue
-        if name in _SIMPLE_FORMATTING or name == "a":
-            if name == "a":
-                if afe_n.get("a"):
-                    return None
-            elif afe_n.get(name, 0) >= 3:
-                return None
-            push(name)
-            stack[-1][2] = True
-            afe_n[name] = afe_n.get(name, 0) + 1
-            continue
-        if name in _VOIDS or name in _PARAM_LIKE:
-            visit_void(name, attrs)
-            continue
-        if name == "hr":
-            if p_open:
-                while stack[-1][0] in IMPLIED_END and stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                while stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                if not pop1():
-                    return None
-            visit_void("hr", attrs)
-            continue
-        if name == "input":
-            visit_void("input", attrs)
-            continue
-        if name == "li":
-            for i in range(len(stack) - 1, -1, -1):
-                t = stack[i][0]
-                if t == "li":
-                    while stack[-1][0] in IMPLIED_END \
-                            and stack[-1][0] != "li":
-                        if not pop1():
-                            return None
-                    while stack[-1][0] != "li":
-                        if not pop1():
-                            return None
-                    if not pop1():
-                        return None
-                    break
-                if t in SPECIAL and t not in ("address", "div", "p"):
-                    break
-            if p_open:
-                while stack[-1][0] in IMPLIED_END and stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                while stack[-1][0] != "p":
-                    if not pop1():
-                        return None
-                if not pop1():
-                    return None
-            push(name)
-            continue
-        # dd / dt
-        for i in range(len(stack) - 1, -1, -1):
-            t = stack[i][0]
-            if t in ("dd", "dt"):
-                while stack[-1][0] in IMPLIED_END \
-                        and stack[-1][0] != t:
-                    if not pop1():
-                        return None
-                while stack[-1][0] != t:
-                    if not pop1():
-                        return None
-                if not pop1():
-                    return None
-                break
-            if t in SPECIAL and t not in ("address", "div", "p"):
-                break
-        if p_open:
-            while stack[-1][0] in IMPLIED_END and stack[-1][0] != "p":
-                if not pop1():
-                    return None
-            while stack[-1][0] != "p":
-                if not pop1():
-                    return None
-            if not pop1():
-                return None
-        push(name)
-
-    flush()
-    return spans
+    ``extract_spans`` over the ``try_fast_parse`` tree.  No package
+    module calls it; it stays because perfbench (replay.py and the
+    html-pages reach count in workloads.py) times and counts it as its
+    own layer.
+    """
+    tb = try_fast_parse(html_text)
+    return None if tb is None else extract_spans(tb)

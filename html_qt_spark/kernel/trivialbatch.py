@@ -1,42 +1,76 @@
 """Batch-vectorized trivial-span extraction over Arrow string arrays.
 
-The columnar counterpart of :mod:`trivialspans` (guide §4.2: hand whole
+The one implementation of the trivial grammar (guide §4.2: hand whole
 batches to vectorized native libraries instead of looping over rows in
-Python).  For spans inside the trivial grammar the extraction result is
-computable with RE2/pyarrow.compute alone — the span text never becomes
-a Python object:
+Python).  For spans inside it the extraction result is computable with
+RE2/pyarrow.compute alone — the span text never becomes a Python
+object.  Everything it rejects is the residue, which runs
+``extractor.extract_html`` (the spec pipeline).
 
-1. classify: one anchored RE2 match of the trivial grammar
-   (trivialspans.py docstring; same grammar minus the possessive-
-   quantifier syntax RE2 neither needs nor supports — every choice
-   point in the grammar is decided by the next character, since text
-   classes exclude ``<``, so backtracking semantics never differ);
+Grammar (ASCII-only, bare lowercase tags, no ``&``/``<`` in text, so
+``str.split()``/``str.strip()`` coincide with their ASCII meaning):
+
+  SPAN   := ITEM (ITEM | TEXT)*
+  ITEM   := PAIR | BOILER | '<div>' (PAIR | BOILER | TEXT)* '</div>'
+  PAIR   := '<t>' TEXT? '</t>'            t in {p h1-h6 li blockquote}
+  BOILER := '<b>' (TEXT | APAIR)* '</b>'  b in {nav header footer aside}
+  APAIR  := '<a' ATTRS '>' TEXT? '</a>'
+  ATTRS  := (WS name ('="' dq-value '"')?)*
+  TEXT   := one or more of: printable ASCII minus '&' '<', tab, newline
+
+``dq-value`` excludes ``"``, ``&``, ``<``, ``>`` and control characters.
+
+Why each construct is output-equivalent to the spec pipeline,
+``extract_spans(parse(...))`` (pinned by tests/test_trivialbatch.py and
+tests/test_trivialspans.py against the tokenizer -> tree builder run):
+
+* Every tag above is outside ``TreeBuilder._INITIAL_LADDER_EXCLUDE``, so
+  the document scaffolds to html/head/body, and none is a raw-text/
+  template/foreign/table element.
+* PAIR tags are BLOCK_TAGS: the open tag flushes any pending text run
+  and starts a block; the matching close pops it (p via close-p, h1-6
+  via the heading branch, li/blockquote via their scope walks — with
+  nothing below them but body/div, every walk reduces to "pop self").
+  The body (no markup inside) is therefore exactly one text block.
+* BOILER tags are BLOCK_TAGS *and* BOILERPLATE_CONTAINERS: everything
+  inside — text runs and well-formed ``<a>`` pairs — is dropped
+  (boiler_depth > 0), and the matched close tag restores depth 0.
+  ``<a>`` pairs close before the next one opens, so the active-
+  formatting checks (one open <a>, Noah's Ark) never fire.
+* ``<div>`` is a BLOCK_TAG p-closer wrapping the same items one level
+  deep (the grammar is non-recursive: a nested div is residue).
+* TEXT runs between items are each a complete text block: every
+  neighboring event is a block push or pop, which flushes the run and
+  clears the #text-merge state, so no run ever merges with another.
+* A block is emitted iff its normalized text is non-empty: with
+  ``MIN_WORDS = 1`` a non-empty block has enough words, and link words
+  are always 0 outside boiler containers, so the link-density gate is
+  ``0 <= MAX_LINK_DENSITY`` (extractor.py constants).
+
+Valid only for document parsing (no fragment context) without
+reference_compat; the batch core in operators/extract.py runs the
+classifier in that mode alone.
+
+The batch path:
+
+1. classify: one anchored RE2 match of the grammar per span;
 2. reduce to blocks: replace each boilerplate container (with its whole
    link-strip content) by one ``\\x01`` separator, then every remaining
    tag by one separator.  Every tag in the grammar is a block
    push/pop, so the separator-delimited pieces are EXACTLY the
    extractor's text blocks in document order (no two text runs can
    merge: some tag event always sits between them);
-3. normalize + threshold columnar: whitespace-collapse (only blocks a
-   memchr-style count proves non-trivial; the rest just trim), drop
-   empty blocks and blocks below ``min_words``.
+3. normalize columnar: whitespace-collapse (only blocks a memchr-style
+   count proves non-trivial; the rest just trim) and drop empty blocks.
 
 ``\\x01`` cannot occur in classified text (the grammar's text class is
 printable-ASCII + tab/newline) nor survive from attribute values (the
-RE2 value class excludes control characters, stricter than the Python
-grammar — stricter only costs fallback, never divergence).
-
-Equivalence with extract_spans(parse(...)) for every ACCEPTED span is
-pinned by tests/test_trivialbatch.py directly against the full spec
-pipeline — independent of the Python trivial path, so a Python-re vs
-RE2 acceptance difference can only cause a fallback, not a divergence.
+value class excludes control characters).
 """
 
 from __future__ import annotations
 
-# RE2 flavor of the kernel/trivialspans.py grammar: identical character
-# classes and structure, no possessive-quantifier syntax, and a
-# control-character-free attribute value class (see module docstring)
+# the grammar of the module docstring, as RE2 patterns
 _B = r"[\t\n -%'-;=-~]"
 _ATTR = r"(?:[\t\n ]+[a-z][a-z0-9-]*(?:=\"[^\"&<>\x00-\x1f]*\")?)*"
 _APAIR = rf"<a{_ATTR}[\t\n ]*>{_B}*</a>"
@@ -52,8 +86,7 @@ _TAG_RE2 = r"</?[a-z][a-z0-9]*>"
 _SEP = "\x01"
 
 
-def vec_trivial(tv, *, min_words: int = 1,
-                max_link_density: float = 0.5):
+def vec_trivial(tv):
     """Vectorized trivial extraction over a pyarrow string array of
     span texts (nulls allowed, they are simply not accepted).
 
@@ -63,12 +96,8 @@ def vec_trivial(tv, *, min_words: int = 1,
     index of each emitted block (non-decreasing; blocks of one span
     appear in document order).  ``accepted[j]`` True means span j's
     full extraction result is exactly its slice of ``norm_kept``, every
-    block of kind 'text' with media_ref None.  Returns None when the
-    parameters rule the closed form out (negative link-density
-    threshold — the 0 <= threshold shortcut would be wrong).
+    block of kind 'text' with media_ref None.
     """
-    if not max_link_density >= 0:
-        return None  # negative or NaN: the 0<=threshold shortcut is wrong
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -112,12 +141,7 @@ def vec_trivial(tv, *, min_words: int = 1,
             [norm.combine_chunks() if isinstance(norm, pa.ChunkedArray)
              else norm, fixed]), pa.array(remap))
 
-    keep = pc.not_equal(norm, "")
-    if min_words > 1:
-        # normalized text is single-spaced, so words = spaces + 1
-        keep = pc.and_(keep, pc.greater_equal(
-            pc.add(pc.count_substring(norm, " "), 1), min_words))
-    keep_np = keep.to_numpy(zero_copy_only=False)
+    keep_np = pc.not_equal(norm, "").to_numpy(zero_copy_only=False)
     kept_pos = np.flatnonzero(keep_np)
     norm_kept = pc.take(norm, pa.array(kept_pos))
     # flat block position -> local accepted-span ordinal -> input index

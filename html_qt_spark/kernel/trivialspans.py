@@ -1,128 +1,24 @@
-"""Trivial-grammar extraction fast path: one C-level regex fullmatch
-plus a 2-4 event finditer pass instead of a Python loop per tag event.
+"""One-span view of the RE2 trivial-grammar batch path.
 
-Motivation (guide §1.2 step 2 / §4.2): the dominant span shapes in real
-crawl corpora are tiny flat fragments — a single paragraph or heading, a
-div wrapping a paragraph plus a nav/footer link strip.  The streaming
-``fast_extract`` scanner already avoids building a DOM, but still pays a
-Python-bytecode loop iteration per tag event (~15 events for a
-div+footer shape).  For a strictly smaller grammar the whole span can be
-classified with ONE possessive-quantifier regex fullmatch (C speed,
-linear — possessive quantifiers forbid backtracking, so *rejection* of
-non-trivial spans is one monotone scan) and extracted with a single
-finditer whose per-event work is a group fetch.
-
-Grammar (ASCII-only, bare lowercase tags, no ``&``/``<`` in text, so
-``str.split()``/``str.strip()`` coincide with their ASCII meaning):
-
-  SPAN   := ITEM (ITEM | TEXT)*
-  ITEM   := PAIR | BOILER | '<div>' (PAIR | BOILER | TEXT)* '</div>'
-  PAIR   := '<t>' TEXT? '</t>'            t in {p h1-h6 li blockquote}
-  BOILER := '<b>' (TEXT | APAIR)* '</b>'  b in {nav header footer aside}
-  APAIR  := '<a' ATTRS '>' TEXT? '</a>'
-  ATTRS  := (WS name ('="' dq-value '"')?)*
-  TEXT   := one or more of: printable ASCII minus '&' '<', tab, newline
-
-Why each construct is output-equivalent to the spec pipeline (all are
-strict subsets of the ``fast_extract`` grammar, argued against its
-handlers; pinned by tests/test_trivialspans.py):
-
-* Every tag above is outside ``TreeBuilder._INITIAL_LADDER_EXCLUDE``, so
-  the document scaffolds to html/head/body exactly as ``fast_extract``
-  assumes, and none is a raw-text/template/foreign/table element.
-* PAIR tags are BLOCK_TAGS: the open tag flushes any pending text run
-  and starts a block; the matching close pops it (p via close-p, h1-6
-  via the heading branch, li/blockquote via their scope walks — with
-  nothing below them but body/div, every walk reduces to "pop self").
-  The body (no markup inside) is therefore exactly one text block.
-* BOILER tags are BLOCK_TAGS *and* BOILERPLATE_CONTAINERS: everything
-  inside — text runs and well-formed ``<a>`` pairs — is dropped
-  (boiler_depth > 0), and the matched close tag restores depth 0.
-  ``<a>`` pairs close before the next one opens, so the active-
-  formatting checks (one open <a>, Noah's Ark) never fire.
-* ``<div>`` is a BLOCK_TAG p-closer wrapping the same items one level
-  deep (the grammar is non-recursive: a nested div falls back).
-* TEXT runs between items are each a complete text block: every
-  neighboring event is a block push or pop, which flushes the run and
-  clears the #text-merge state, so no run ever merges with another.
-* A block is emitted iff its normalized text is non-empty and its word
-  count >= min_words; link words are always 0 outside boiler containers,
-  so the link-density gate reduces to ``0 <= max_link_density`` (checked
-  once up front — a negative threshold falls back to the full path).
-
-Only valid where the streaming fast path is valid: document parsing
-(no fragment context) without reference_compat, collect_errors=False.
+``trivial_extract`` runs ``trivialbatch.vec_trivial`` (the grammar and
+its equivalence argument live in that module's docstring) over a
+one-element array.  No package module calls it: the Spark operators
+classify whole batches, and ``extract_html`` is the residue path.  It
+stays because perfbench (replay.py and the html-pages reach count in
+workloads.py) times and counts it as its own layer.
 """
 
 from __future__ import annotations
 
-import re
-
-from .extractor import _norm
-
-# printable ASCII (0x20-0x7E) minus '&' (0x26) and '<' (0x3C), plus \t \n
-_B = r"[\t\n -%'-;=-~]"
-# attributes: strict subset of the tokenizer's _FAST_START grammar —
-# lowercase names, double-quoted values only, no spaces around '=',
-# no '&'/'<'/'>'/NUL in values, no self-closing slash
-_ATTR = r"(?:[\t\n ]++[a-z][a-z0-9-]*+(?:=\"[^\"&<>\x00]*+\")?+)*+"
-_APAIR = rf"<a{_ATTR}[\t\n ]*+>{_B}*+</a>"
-_LINKTEXT = rf"(?:{_B}++|{_APAIR})*+"
-_PTAGS = ("p", "h1", "h2", "h3", "h4", "h5", "h6", "li", "blockquote")
-_BTAGS = ("nav", "header", "footer", "aside")
-_PAIR = "(?:" + "|".join(rf"<{t}>{_B}*+</{t}>" for t in _PTAGS) + ")"
-_BOILER = "(?:" + "|".join(rf"<{t}>{_LINKTEXT}</{t}>" for t in _BTAGS) + ")"
-_DIV = rf"<div>(?:{_PAIR}|{_BOILER}|{_B}++)*+</div>"
-_ITEM = rf"(?:{_PAIR}|{_BOILER}|{_DIV})"
-_CLASS_RX = re.compile(rf"{_ITEM}(?:{_ITEM}|{_B}++)*+\Z")
-
-# the single most common span shape gets a direct one-match path: the
-# whole span is exactly one PAIR, body captured (backreference enforces
-# the matched close tag — fine here, this is Python re, not RE2)
-_SINGLE_RX = re.compile(
-    rf"<({'|'.join(_PTAGS)})>({_B}*+)</\1>\Z")
-
-# event pass over an already-classified span: group 1 = pair body,
-# group 2 = top/div-level text run; boiler containers and div tags
-# match group-free and are skipped.  Loose char classes are safe — the
-# classifier already validated every byte.
-_EVENT_RX = re.compile(
-    # boiler inner: '<a...>' must not swallow '</aside>' (which starts
-    # with '</a'), so opens and the literal '</a>' close are separate
-    # alternatives — the classifier guarantees no other tag occurs inside
-    r"<(?:p|h[1-6]|li|blockquote)>([^<]*+)</[a-z0-9]++>"
-    r"|<(?:nav|header|footer|aside)>(?:[^<]++|<a[^<>]*+>|</a>)*+"
-    r"</(?:nav|header|footer|aside)>"
-    r"|</?div>"
-    r"|([^<]++)")
+from .trivialbatch import vec_trivial
 
 
-def trivial_extract(html_text: str, *, max_link_density: float = 0.5,
-                    min_words: int = 1) -> list | None:
+def trivial_extract(html_text: str) -> list | None:
     """(kind, text, media_ref) spans for trivial-grammar input, else
-    None (caller falls back to fast_extract / the full pipeline)."""
-    if not max_link_density >= 0:
-        return None  # negative or NaN: the 0<=threshold shortcut is wrong
-    m = _SINGLE_RX.match(html_text)
-    if m is not None:
-        t = _norm(m.group(2))
-        # after _norm the text is single-spaced, so the word count is
-        # one C-level count instead of an allocating split()
-        if t and t.count(" ") + 1 >= min_words:
-            return [("text", t, None)]
-        return []
-    if _CLASS_RX.match(html_text) is None:
+    None."""
+    import pyarrow as pa
+
+    accepted, norm_kept, _ = vec_trivial(pa.array([html_text], pa.string()))
+    if not accepted[0]:
         return None
-    spans: list[tuple[str, str | None, str | None]] = []
-    append = spans.append
-    norm = _norm
-    for m in _EVENT_RX.finditer(html_text):
-        b = m.group(1)
-        if b is None:
-            b = m.group(2)
-            if b is None:
-                continue  # boiler container or div tag
-        t = norm(b)
-        if t and t.count(" ") + 1 >= min_words:
-            append(("text", t, None))
-    return spans
+    return [("text", t, None) for t in norm_kept.to_pylist()]

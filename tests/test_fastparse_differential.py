@@ -52,8 +52,8 @@ def assert_equivalent(html: str) -> bool:
     if fast is not None:
         slow = slow_parse(html)
         assert state(fast) == state(slow), html
-    # streaming extraction must agree with the DOM walk wherever it
-    # accepts — independently of whether try_fast_parse accepted
+    # the extraction view must agree with the DOM walk over the spec
+    # tree wherever it accepts
     spans = fast_extract(html)
     if spans is not None:
         if slow is None:
@@ -110,7 +110,7 @@ TAGS = ["p", "div", "h1", "h2", "nav", "footer", "section", "ul", "li",
         "dd", "dt", "dl", "span", "em", "strong", "b", "i", "a", "code",
         "article", "blockquote", "figure", "figcaption", "main", "aside",
         # skipped-subtree tags that are ORDINARY to the tree builder —
-        # the streaming extractor must bail on them, not emit their text
+        # the fast path must not emit their text
         "noscript", "datalist"]
 VOIDS = ["br", "img", "hr", "input", "wbr", "embed", "source"]
 
@@ -172,8 +172,8 @@ def test_randomized_simple_corpus():
 def test_skip_subtree_tags_not_extracted():
     """Regression: in-body <noscript>/<datalist> are ordinary elements
     to the tree builder but their subtrees are SKIP_SUBTREES for the
-    extractor — the streaming fast path must not emit their content
-    (it bails; the DOM walk is the contract)."""
+    extractor — the fast path must not emit their content (the DOM walk
+    is the contract)."""
     from html_qt_spark.kernel.extractor import extract_html
 
     assert extract_html(

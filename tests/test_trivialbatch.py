@@ -1,10 +1,10 @@
 """Pinning of the Arrow-vectorized batch extraction (kernel/trivialbatch
 + the shared batch core in operators/extract) against the exact spec
-pipeline.  vec_trivial is compared directly with
-extract_spans(parse(...)) — NOT with the Python trivial path — so an
-RE2-vs-Python-re acceptance difference can only surface as a fallback,
-never as a divergence.  The batch core is fuzzed in process against a
-per-row reference computed with the kernel, under both groupings; the
+pipeline.  vec_trivial is compared directly with extract_spans over the
+tokenizer -> tree-builder run, which takes no fast path.  The residue
+path is pinned to be that same pipeline (extract_html = parse ->
+extract_spans).  The batch core is fuzzed in process against a per-row
+reference computed with the kernel, under both groupings; the
 Spark-level tests pin the full operators (quarantine, media
 pass-through, span_idx numbering) against the same reference."""
 
@@ -26,16 +26,10 @@ from tests.test_trivialspans import (  # noqa: E402
 )
 
 
-def _vec_spans(texts: list, min_words: int = 1,
-               max_link_density: float = 0.5):
+def _vec_spans(texts: list):
     import pyarrow as pa
 
-    res = vec_trivial(pa.array(texts, pa.string()),
-                      min_words=min_words,
-                      max_link_density=max_link_density)
-    if res is None:
-        return None
-    accepted, norm_kept, kept_span = res
+    accepted, norm_kept, kept_span = vec_trivial(pa.array(texts, pa.string()))
     per = [[] for _ in texts]
     for s, t in zip(kept_span, norm_kept.to_pylist()):
         per[int(s)].append(("text", t, None))
@@ -56,23 +50,6 @@ def test_nulls_and_rejects():
     assert out[0] is None and out[1] is None and out[2] is None
     assert out[3] == [("text", "ok text", None)]
     assert out[4] is None and out[5] is None
-
-
-def test_negative_link_density_disables():
-    import pyarrow as pa
-
-    assert vec_trivial(pa.array(["<p>x</p>"]),
-                       min_words=1, max_link_density=-0.5) is None
-
-
-def test_min_words_vectorized():
-    texts = ["<p>one</p>", "<p>two words</p>", "<p>a b c</p>",
-             "<div>x<p>b b</p></div>"]
-    for mw in (1, 2, 3):
-        out = _vec_spans(texts, min_words=mw)
-        for s, got in zip(texts, out):
-            if got is not None:
-                assert got == slow_extract(s, min_words=mw), (s, mw)
 
 
 def test_randomized_corpora_vs_full_pipeline():
@@ -231,23 +208,6 @@ def test_media_text_matching_grammar_exploded(spark):
     assert got == _expected_doc_rows(MEDIA_TRAP_DOCS)
 
 
-def test_nan_link_density_falls_back():
-    """NaN threshold: every comparison is False, so the full pipeline
-    drops all blocks — the closed-form paths must decline, not keep
-    them."""
-    import math
-
-    from html_qt_spark.kernel.trivialspans import trivial_extract
-
-    assert trivial_extract("<p>a b</p>",
-                           max_link_density=math.nan) is None
-    import pyarrow as pa
-
-    assert vec_trivial(pa.array(["<p>a b</p>"]),
-                       min_words=1, max_link_density=math.nan) is None
-    assert slow_extract("<p>a b</p>", max_link_density=math.nan) == []
-
-
 def test_spark_exploded_mode_edges(spark):
     from pyspark.sql import types as T
 
@@ -367,6 +327,50 @@ def test_doc_mode_stops_group_at_first_failure(monkeypatch):
     assert seen == a[:2] + b
     assert got == _expected_doc_rows(docs)
     assert got[0][2:] == ("__quarantine__", "RuntimeError:boom", None, 0)
+
+
+def test_extract_html_single_residue_path(monkeypatch):
+    """The residue path is parse -> extract_spans and nothing else: with
+    the one-span views trivial_extract and fast_extract made to raise,
+    extract_html (string, bytes, fragment) and the batch core over
+    BinaryType text (which skips the RE2 classifier) still equal the
+    spec pipeline."""
+    import numpy as np
+    import pyarrow as pa
+
+    from html_qt_spark.kernel import fastparse, trivialspans
+    from html_qt_spark.kernel.extractor import extract_html
+    from html_qt_spark.operators.extract import extract_span_batch
+
+    def off_path(*args, **kwargs):
+        raise AssertionError("not on the residue path")
+
+    # replace the code of the function objects, so that a reference
+    # bound before this test raises too
+    for fn in (trivialspans.trivial_extract, fastparse.fast_extract):
+        monkeypatch.setattr(fn, "__code__", off_path.__code__)
+
+    fast_doc = '<p class="x">a <b>b</b></p>'
+    assert fastparse.try_fast_parse(fast_doc) is not None
+    page = ('<!DOCTYPE html><html><head><title>t</title></head><body>'
+            '<nav><a href="/">home</a></nav><p>a &amp; b</p>'
+            '<img src="m://1" alt="x"></body></html>')
+    texts = BENCH_SHAPES + [fast_doc, page]
+    for s in texts:
+        assert extract_html(s) == slow_extract(s), s
+    assert extract_html(BENCH_SHAPES[1].encode()) == \
+        slow_extract(BENCH_SHAPES[1])
+    assert extract_html("<p>a</p>", fragment_context="div") == \
+        slow_extract("<p>a</p>")
+
+    n = len(texts)
+    out = extract_span_batch(
+        pa.array(["text"] * n), pa.array([s.encode() for s in texts]),
+        pa.array([None] * n, pa.string()), np.arange(n))
+    got = sorted(zip(*(out.column(c).to_pylist() for c in
+                       ("span", "idx", "kind", "text", "media_ref"))))
+    assert got == [(j, i) + sp for j, s in enumerate(texts)
+                   for i, sp in enumerate(slow_extract(s))]
 
 
 _LONG = "<p>" + "word " * 12 + "</p>"

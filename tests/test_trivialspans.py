@@ -1,10 +1,12 @@
-"""Differential pinning of kernel/trivialspans.py against the exact
-spec pipeline: for every input the trivial path ACCEPTS, its spans must
-equal extract_spans(parse(input)) — the full tokenizer -> tree-builder
--> DOM-walk run, bypassing both fast paths.  Inputs: the bench span
-shapes, the conformance fixture payloads, the fastparse differential
-generator's corpus, a dedicated in-grammar + near-miss randomized
-corpus, and parameter sweeps (min_words, max_link_density)."""
+"""Differential pinning of the trivial grammar (kernel/trivialbatch.py)
+through its one-span view, kernel/trivialspans.py::trivial_extract,
+against the exact spec pipeline: for every input the grammar ACCEPTS,
+its spans must equal extract_spans over the tokenizer -> tree-builder
+run, which takes no fast path.  Inputs: the bench span shapes, edge and
+near-miss shapes, the conformance fixture payloads, the fastparse
+differential generator's corpus and a dedicated in-grammar + near-miss
+randomized corpus.  ``slow_extract``, ``BENCH_SHAPES`` and
+``_random_trivial`` are shared with tests/test_trivialbatch.py."""
 
 from __future__ import annotations
 
@@ -23,20 +25,20 @@ from html_qt_spark.kernel.trivialspans import trivial_extract  # noqa: E402
 FIXTURES = Path(__file__).parent / "fixtures"
 
 
-def slow_extract(html: str, **kw) -> list:
+def slow_extract(html: str) -> list:
     tk = HTMLTokenizer(html, collect_errors=False)
     tokens, _ = tk.run()
     tb = TreeBuilder(collect_errors=False)
     tb.process(tokens)
-    return extract_spans(tb, **kw)
+    return extract_spans(tb)
 
 
-def assert_equivalent(html: str, **kw) -> bool:
+def assert_equivalent(html: str) -> bool:
     """True when the trivial path accepted the input."""
-    spans = trivial_extract(html, **kw)
+    spans = trivial_extract(html)
     if spans is None:
         return False
-    assert spans == slow_extract(html, **kw), html
+    assert spans == slow_extract(html), html
     return True
 
 
@@ -113,20 +115,6 @@ def test_bail_cases_return_none():
     ]
     for s in cases:
         assert trivial_extract(s) is None, f"should bail: {s!r}"
-
-
-def test_parameter_sweeps():
-    for s in BENCH_SHAPES + ["<p>one</p>", "<p>two words</p>",
-                             "<div>a<p>bb cc dd</p></div>"]:
-        for mw in (1, 2, 3, 5):
-            assert trivial_extract(s, min_words=mw) == \
-                slow_extract(s, min_words=mw), (s, mw)
-        for mld in (0.0, 0.3, 1.0):
-            assert trivial_extract(s, max_link_density=mld) == \
-                slow_extract(s, max_link_density=mld), (s, mld)
-    # negative threshold: the closed-form "0 <= mld" shortcut is wrong
-    # there, so the trivial path must decline
-    assert trivial_extract("<p>x</p>", max_link_density=-1.0) is None
 
 
 def test_conformance_fixture_payloads():
@@ -237,13 +225,3 @@ def test_fastparse_generator_corpus():
     rng = random.Random(20260823)
     for _ in range(2000):
         assert_equivalent(_random_doc(rng))
-
-
-def test_wired_into_extract_html():
-    from html_qt_spark.kernel import extractor
-
-    for s in BENCH_SHAPES:
-        assert extractor.extract_html(s) == slow_extract(s)
-    # gated off for fragment/compat modes (those take their own paths)
-    assert extractor.extract_html(
-        "<p>a</p>", fragment_context="div") == slow_extract("<p>a</p>")
