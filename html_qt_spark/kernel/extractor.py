@@ -260,8 +260,8 @@ def extract_html(
     kernel/encoding.py) — the north_star ingests "raw HTML bytes"; the
     reference never decodes (QString in, htmltokenizer.cpp:48-54).
     This is the residue path behind the Spark operators' RE2 batch
-    classifier (kernel/trivialbatch.py); ``parse`` keeps its own fast
-    path for simple fragments (kernel/fastparse.py::try_fast_parse).
+    classifier (kernel/trivialbatch.py), and the same tokenizer → tree
+    builder run for every input.
     Engine equivalent of HTMLParser::parse (html-qt/htmlparser.cpp:51-58)
     plus the span sink the reference lacks."""
     if isinstance(html_text, (bytes, bytearray, memoryview)):

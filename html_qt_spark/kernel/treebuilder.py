@@ -2395,9 +2395,6 @@ def parse_fragment(html_text: str, *, context: str = "body",
     return tb
 
 
-_try_fast_parse = None
-
-
 def parse(html_text: str, *, reference_compat: bool = False,
           collect_errors: bool = True) -> TreeBuilder:
     """Parse one document: tokenizer → tree builder.
@@ -2406,19 +2403,9 @@ def parse(html_text: str, *, reference_compat: bool = False,
     set text, run tokenizer, construct tree — except tokens flow as a
     materialized list (the reference's dead ``tokenQueue``,
     htmltokenizer_p.h:163, done right) so the tree builder is a separate,
-    testable stage.
-
-    When no parse errors are requested, simple well-formed fragments
-    take the fused fast path (kernel/fastparse.py) which bails back
-    here on anything outside its provably-identical grammar.
+    testable stage.  Every caller takes this same path; there is no
+    second tree builder.
     """
-    if not collect_errors and not reference_compat:
-        global _try_fast_parse
-        if _try_fast_parse is None:
-            from .fastparse import try_fast_parse as _try_fast_parse  # noqa: PLW0603
-        tb = _try_fast_parse(html_text)
-        if tb is not None:
-            return tb
     tk = HTMLTokenizer(html_text, reference_compat=reference_compat,
                        collect_errors=collect_errors)
     tokens, _tok_errors = tk.run()

@@ -36,6 +36,7 @@ read their input through one projection, :func:`_span_lists`.
 from __future__ import annotations
 
 import functools
+import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -97,12 +98,18 @@ def extract_span_batch(kind, text, media_ref, group, *,
     - a null or empty text span emits nothing;
     - a text span longer than ``max_span_bytes`` (codepoints; bytes
       for binary text) is a failure;
-    - string text outside ``reference_compat`` / ``fragment_context``
-      is classified by the RE2 batch path (``vec_trivial``), and only
-      the residue runs ``extract_html``, in ascending span order —
+    - text outside ``reference_compat`` / ``fragment_context`` is
+      classified by the RE2 batch path (``vec_trivial``; binary text
+      through an ASCII view, see below), and only the residue runs
+      ``extract_html`` on the original value, in ascending span order —
       spans after their group's first failure never run;
     - a failed group collapses to ONE ``QUARANTINE_KIND`` row (idx 0,
       media_ref null) whose text is the first failure in span order.
+
+    The ASCII view of binary text turns every non-ASCII byte into
+    ``\\x01``, which the ASCII-only grammar rejects; an accepted value is
+    all ASCII, which ``decode_html`` maps to the same characters (a BOM
+    is non-ASCII, and ``<meta`` is outside the grammar).
 
     Poison-pill policy: the engine version of the reference's fatal
     no-progress guard (html-qt/htmltokenizer.cpp:66-80), made non-fatal
@@ -134,8 +141,10 @@ def extract_span_batch(kind, text, media_ref, group, *,
     accepted = np.zeros(n, dtype=bool)
     norm_kept = pa.array([], str_ty)
     kept_span = within = np.empty(0, np.int64)
-    if textual and not reference_compat and fragment_context is None:
-        accepted, norm_kept, kept_span = vec_trivial(text)
+    if not reference_compat and fragment_context is None:
+        accepted, norm_kept, kept_span = vec_trivial(
+            text if textual else pc.replace_substring_regex(
+                text, r"[^\x00-\x7f]", "\x01").cast(str_ty))
         accepted = accepted & text_ok & ~oversize
         # vec_trivial classified EVERY value (media text included); drop
         # the blocks of spans the masks above just rejected
@@ -582,16 +591,24 @@ DOC_META_SCHEMA = T.StructType([
 ])
 
 
+# the elements extract_metadata reads come only from their own start
+# tags (html attributes only from an <html start tag).  A NUL in a name
+# becomes U+FFFD; the tokenizer lowercases names with str.lower(), which
+# also folds KELVIN SIGN to "k", so the match is Unicode case-insensitive
+_META_GATE = re.compile(r"<(?:title|meta|link|html)", re.I)
+
+
 def _metadata_doc(kinds, texts, refs):
     """One document -> (title, meta_description, canonical_url, lang),
     the first non-null value across its text spans winning; a span the
-    kernel fails on is skipped."""
+    kernel fails on is skipped, and a span with no ``_META_GATE`` start
+    tag, which can only yield all-null metadata, is never parsed."""
     from html_qt_spark.kernel.extractor import extract_metadata
     from html_qt_spark.kernel.treebuilder import parse
 
     acc = (None, None, None, None)
     for kind, html in zip(kinds or (), texts or ()):
-        if kind == "media" or not html:
+        if kind == "media" or not html or not _META_GATE.search(html):
             continue
         if None not in acc:
             break

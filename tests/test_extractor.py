@@ -44,6 +44,17 @@ def test_empty_and_trivial_docs():
     assert extract_html("bare text") == [("text", "bare text", None)]
 
 
+def test_skip_subtree_tags_not_extracted():
+    """In-body <noscript>/<datalist> are ordinary elements to the tree
+    builder, but their subtrees are SKIP_SUBTREES for the extractor:
+    their content is never emitted (the DOM walk is the contract)."""
+    assert extract_html(
+        '<div>visible<noscript>hidden<img src="m://px"></noscript>'
+        "tail</div>") == [("text", "visibletail", None)]
+    assert extract_html(
+        "<p>a<datalist>opt</datalist>b</p>") == [("text", "ab", None)]
+
+
 def test_metadata_extraction_matches_oracle():
     from html_qt_spark.kernel.extractor import extract_metadata
     from html_qt_spark.kernel.treebuilder import parse as _parse

@@ -21,6 +21,7 @@ sys.path.insert(0, str(Path(__file__).parent.parent))
 from html_qt_spark.kernel.trivialbatch import vec_trivial  # noqa: E402
 from tests.test_trivialspans import (  # noqa: E402
     BENCH_SHAPES,
+    _random_doc,
     _random_trivial,
     slow_extract,
 )
@@ -53,8 +54,6 @@ def test_nulls_and_rejects():
 
 
 def test_randomized_corpora_vs_full_pipeline():
-    from tests.test_fastparse_differential import _random_doc
-
     rng = random.Random(20260824)
     docs = [_random_trivial(rng) for _ in range(3000)]
     docs += [_random_doc(rng) for _ in range(1500)]
@@ -331,10 +330,10 @@ def test_doc_mode_stops_group_at_first_failure(monkeypatch):
 
 def test_extract_html_single_residue_path(monkeypatch):
     """The residue path is parse -> extract_spans and nothing else: with
-    the one-span views trivial_extract and fast_extract made to raise,
-    extract_html (string, bytes, fragment) and the batch core over
-    BinaryType text (which skips the RE2 classifier) still equal the
-    spec pipeline."""
+    the one-span view trivial_extract and perfbench's fastparse names
+    made to raise, extract_html (string, bytes, fragment) and the batch
+    core over BinaryType text (RE2 classifier, then the residue) still
+    equal the spec pipeline."""
     import numpy as np
     import pyarrow as pa
 
@@ -347,11 +346,11 @@ def test_extract_html_single_residue_path(monkeypatch):
 
     # replace the code of the function objects, so that a reference
     # bound before this test raises too
-    for fn in (trivialspans.trivial_extract, fastparse.fast_extract):
+    for fn in (trivialspans.trivial_extract, fastparse.fast_extract,
+               fastparse.try_fast_parse):
         monkeypatch.setattr(fn, "__code__", off_path.__code__)
 
     fast_doc = '<p class="x">a <b>b</b></p>'
-    assert fastparse.try_fast_parse(fast_doc) is not None
     page = ('<!DOCTYPE html><html><head><title>t</title></head><body>'
             '<nav><a href="/">home</a></nav><p>a &amp; b</p>'
             '<img src="m://1" alt="x"></body></html>')
@@ -373,13 +372,49 @@ def test_extract_html_single_residue_path(monkeypatch):
                    for i, sp in enumerate(slow_extract(s))]
 
 
+def test_binary_text_classified_by_re2(monkeypatch):
+    """BinaryType text goes through the RE2 classifier (an ASCII view):
+    with extract_html made to raise, the bench shapes as bytes (in a
+    sliced array with nulls) emit no quarantine row and equal the spec
+    pipeline, while a BOM or a non-ASCII byte keeps an otherwise
+    trivial span on the residue."""
+    import numpy as np
+    import pyarrow as pa
+
+    from html_qt_spark.kernel import extractor
+    from html_qt_spark.operators.extract import (
+        QUARANTINE_KIND,
+        extract_span_batch,
+    )
+
+    def no_residue(html, **kw):
+        raise RuntimeError(f"residue:{html[:8]!r}")
+
+    monkeypatch.setattr(extractor, "extract_html", no_residue)
+    texts = [b"<p>dropped by the slice</p>", None] + \
+        [s.encode() for s in BENCH_SHAPES] + [None]
+    n = len(texts) - 1
+    out = extract_span_batch(
+        pa.array(["text"] * (n + 1)).slice(1),
+        pa.array(texts, pa.binary()).slice(1),
+        pa.array([None] * (n + 1), pa.string()).slice(1), np.arange(n))
+    assert QUARANTINE_KIND not in out.column("kind").to_pylist()
+    got = sorted(zip(*(out.column(c).to_pylist() for c in
+                       ("span", "idx", "kind", "text", "media_ref"))))
+    assert got == [(j + 1, i) + sp for j, s in enumerate(BENCH_SHAPES)
+                   for i, sp in enumerate(slow_extract(s))]
+
+    residue = [b"\xef\xbb\xbf<p>bom</p>", "<p>café</p>".encode()]
+    out = extract_span_batch(
+        pa.array(["text"] * 2), pa.array(residue, pa.binary()),
+        pa.array([None] * 2, pa.string()), np.arange(2))
+    assert out.column("kind").to_pylist() == [QUARANTINE_KIND] * 2
+
+
 _LONG = "<p>" + "word " * 12 + "</p>"
 
 
 def _random_span(rng, binary):
-    from tests.test_fastparse_differential import _random_doc
-    from tests.test_trivialspans import _random_trivial
-
     kind = rng.choice(["text"] * 6 + ["media", None, "weird"])
     text = rng.choice([
         None, "", _random_trivial(rng), _random_trivial(rng),

@@ -3,10 +3,11 @@ through its one-span view, kernel/trivialspans.py::trivial_extract,
 against the exact spec pipeline: for every input the grammar ACCEPTS,
 its spans must equal extract_spans over the tokenizer -> tree-builder
 run, which takes no fast path.  Inputs: the bench span shapes, edge and
-near-miss shapes, the conformance fixture payloads, the fastparse
-differential generator's corpus and a dedicated in-grammar + near-miss
-randomized corpus.  ``slow_extract``, ``BENCH_SHAPES`` and
-``_random_trivial`` are shared with tests/test_trivialbatch.py."""
+near-miss shapes, the conformance fixture payloads, a corpus of wilder
+simple-markup documents (``_random_doc``) and a dedicated in-grammar +
+near-miss randomized corpus.  ``slow_extract``, ``BENCH_SHAPES``,
+``fixture_payloads``, ``_random_doc`` and ``_random_trivial`` are
+shared with tests/test_trivialbatch.py and tests/test_metadata_gate.py."""
 
 from __future__ import annotations
 
@@ -117,31 +118,34 @@ def test_bail_cases_return_none():
         assert trivial_extract(s) is None, f"should bail: {s!r}"
 
 
-def test_conformance_fixture_payloads():
-    n_inputs = 0
+def fixture_payloads() -> list[str]:
+    """Every non-empty input of the tokenizer and tree-construction
+    conformance fixtures."""
+    docs: list[str] = []
     for sub in ("tokenizer", "tree-construction"):
         d = FIXTURES / sub
         if not d.is_dir():
             continue
         for f in sorted(d.iterdir()):
             raw = f.read_text(encoding="utf-8", errors="replace")
-            docs = []
             if f.suffix == ".test":
                 try:
-                    docs = [t.get("input", "")
-                            for t in json.loads(raw).get("tests", [])]
+                    docs += [t.get("input", "")
+                             for t in json.loads(raw).get("tests", [])]
                 except Exception:
                     continue
             elif f.suffix == ".dat":
                 for block in raw.split("\n\n#data\n"):
                     body = block.split("\n#errors", 1)[0]
                     docs.append(body.removeprefix("#data\n"))
-            for doc in docs:
-                if not doc:
-                    continue
-                n_inputs += 1
-                assert_equivalent(doc)
-    assert n_inputs > 200
+    return [doc for doc in docs if doc]
+
+
+def test_conformance_fixture_payloads():
+    docs = fixture_payloads()
+    for doc in docs:
+        assert_equivalent(doc)
+    assert len(docs) > 200
 
 
 _WORDS = ["alpha", "beta", "gamma", "x", "1", "two words", "a  b",
@@ -205,6 +209,59 @@ def _random_trivial(rng: random.Random) -> str:
     return doc
 
 
+TAGS = ["p", "div", "h1", "h2", "nav", "footer", "section", "ul", "li",
+        "dd", "dt", "dl", "span", "em", "strong", "b", "i", "a", "code",
+        "article", "blockquote", "figure", "figcaption", "main", "aside",
+        # skipped-subtree tags that are ORDINARY to the tree builder —
+        # the extractor must not emit their text
+        "noscript", "datalist"]
+VOIDS = ["br", "img", "hr", "input", "wbr", "embed", "source"]
+
+
+def _random_doc(rng: random.Random) -> str:
+    """Simple markup outside the trivial grammar: attributes, voids,
+    media, ignored start tags and mis-nested end tags."""
+    parts = [f"<{rng.choice(TAGS)}>"]  # ladder-qualifying opener
+    for _ in range(rng.randint(1, 40)):
+        r = rng.random()
+        if r < 0.35:
+            parts.append(rng.choice([
+                "some words", " spaced  text ", "x", "Tab\there",
+                "line\nbreak", "MiXeD Case Words", "1 2 3 4",
+            ]))
+        elif r < 0.60:
+            t = rng.choice(TAGS)
+            if rng.random() < 0.4:
+                parts.append(
+                    f'<{t} class="c{rng.randint(0, 3)}" '
+                    f"data-x='{rng.randint(0, 9)}' flag>")
+            else:
+                parts.append(f"<{t.upper() if rng.random() < .2 else t}>")
+        elif r < 0.80:
+            # end tag, frequently mis-nested on purpose
+            parts.append(f"</{rng.choice(TAGS)}>")
+        elif r < 0.88:
+            v = rng.choice(VOIDS)
+            if v in ("img", "embed", "source") and rng.random() < 0.6:
+                parts.append(
+                    f'<{v} src="m://{rng.randint(0, 9)}"'
+                    + (' alt="an alt"' if rng.random() < 0.4 else "")
+                    + (">" if rng.random() < 0.5 else "/>"))
+            else:
+                parts.append(f"<{v}>" if rng.random() < 0.5 else f"<{v}/>")
+        elif r < 0.94:
+            # ignored start tags / stray end tags BETWEEN text runs merge
+            # adjacent #text nodes — the word-count-sensitive case
+            parts.append(rng.choice(["wordA", "a b", "x"]))
+            parts.append(rng.choice(
+                ["<caption>", "<tr>", "<td>", "</article>", "</span>"]))
+            parts.append(rng.choice(["wordB", "c d", "y"]))
+        else:
+            t = rng.choice(TAGS + ["video", "audio"])
+            parts.append(f"<{t}>{rng.choice(['x', 'y words'])}</{t}>")
+    return "".join(parts)
+
+
 def test_randomized_trivial_corpus():
     rng = random.Random(20260822)
     n_acc = 0
@@ -218,10 +275,9 @@ def test_randomized_trivial_corpus():
 
 
 def test_fastparse_generator_corpus():
-    """The fastparse differential generator's wilder documents: the
-    trivial path must never accept-and-diverge on them either."""
-    from tests.test_fastparse_differential import _random_doc
-
+    """The wilder ``_random_doc`` documents (mis-nested tags,
+    attributes, voids, ignored start tags): the trivial path must never
+    accept-and-diverge on them either."""
     rng = random.Random(20260823)
     for _ in range(2000):
         assert_equivalent(_random_doc(rng))
