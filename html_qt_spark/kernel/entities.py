@@ -20,6 +20,7 @@ the tokenizer reproduces the truncation for fixture parity.
 from __future__ import annotations
 
 import html.entities
+import re
 
 # name (with or without trailing ';') -> replacement text.
 ENTITIES: dict[str, str] = dict(html.entities.html5)
@@ -34,6 +35,10 @@ LEGACY_NO_SEMI: frozenset[str] = frozenset(
 
 # First-character index to skip the prefix scan for obvious non-entities.
 _FIRST_CHARS: frozenset[str] = frozenset(k[0] for k in ENTITIES)
+
+# Every name is [A-Za-z0-9]+;? and at most MAX_ENTITY_LEN chars, so a
+# match lies inside this run: only its prefixes need a lookup.
+_NAME_RUN = re.compile(r"[A-Za-z0-9]{1,%d};?" % (MAX_ENTITY_LEN - 1))
 
 # windows-1252 remap for numeric refs in 0x80..0x9F
 # (mirrors html-qt/htmltokenizer_p.h:172-201; values are the public
@@ -57,11 +62,10 @@ def match_named(buf: str, start: int) -> tuple[str, int] | None:
     """
     if start >= len(buf) or buf[start] not in _FIRST_CHARS:
         return None
-    window = buf[start : start + MAX_ENTITY_LEN]
+    run = _NAME_RUN.match(buf, start).group()
     # Longest-first: a semicolon form always beats its legacy prefix.
-    for ln in range(min(len(window), MAX_ENTITY_LEN), 0, -1):
-        cand = window[:ln]
-        rep = ENTITIES.get(cand)
+    for ln in range(len(run), 0, -1):
+        rep = ENTITIES.get(run[:ln])
         if rep is not None:
             return rep, ln
     return None

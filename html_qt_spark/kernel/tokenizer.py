@@ -97,6 +97,16 @@ _SCRIPT_ESC_RX = re.compile(r"[<\-\x00]")
 
 _CRLF_RX = re.compile(r"\r\n?")
 
+# WHATWG lowercases ASCII letters only in tag, attribute and DOCTYPE
+# names; str.lower() would also fold e.g. KELVIN SIGN (U+212A) to "k"
+_ASCII_LOWER = str.maketrans("ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+                             "abcdefghijklmnopqrstuvwxyz")
+
+
+def _ascii_lower(s: str) -> str:
+    return s.lower() if s.isascii() else s.translate(_ASCII_LOWER)
+
+
 # ---- fast-path tag regexes (data state only) -------------------------
 # One regex match replaces ~6-10 state-machine calls for the overwhelmingly
 # common well-formed tags.  The character classes are deliberately
@@ -607,7 +617,7 @@ class HTMLTokenizer:
                     break
             run = run[:stop]
         if run:
-            self.tag_name += run.lower()
+            self.tag_name += _ascii_lower(run)
             self.temp_buf.append(run)
             self.pos += len(run)
         appropriate = self.tag_name == self.last_start_tag
@@ -974,7 +984,7 @@ class HTMLTokenizer:
         # html-qt/htmltokenizer.cpp:239-271 (run-coalesced)
         m = _TAG_NAME_RUN.match(self.html, self.pos)
         if m:
-            self.tag_name += m.group().lower()
+            self.tag_name += _ascii_lower(m.group())
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
@@ -1023,7 +1033,7 @@ class HTMLTokenizer:
         # html-qt/htmltokenizer.cpp:322-359 (run-coalesced, lowered)
         m = _ATTR_NAME_RUN.match(self.html, self.pos)
         if m:
-            self.attr_name.append(m.group().lower())
+            self.attr_name.append(_ascii_lower(m.group()))
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
@@ -1411,7 +1421,7 @@ class HTMLTokenizer:
             self.state = self._doctype_name_state
         else:
             self.pos += 1
-            self.doctype_name = [c.lower()]
+            self.doctype_name = [_ascii_lower(c)]
             self.state = self._doctype_name_state
         return True
 
@@ -1419,7 +1429,7 @@ class HTMLTokenizer:
         # html-qt/htmltokenizer.cpp:916-947 (run-coalesced)
         m = _DOCTYPE_NAME_RUN.match(self.html, self.pos)
         if m:
-            self.doctype_name.append(m.group().lower())
+            self.doctype_name.append(_ascii_lower(m.group()))
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:

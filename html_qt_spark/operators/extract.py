@@ -593,9 +593,8 @@ DOC_META_SCHEMA = T.StructType([
 
 # the elements extract_metadata reads come only from their own start
 # tags (html attributes only from an <html start tag).  A NUL in a name
-# becomes U+FFFD; the tokenizer lowercases names with str.lower(), which
-# also folds KELVIN SIGN to "k", so the match is Unicode case-insensitive
-_META_GATE = re.compile(r"<(?:title|meta|link|html)", re.I)
+# becomes U+FFFD, and the tokenizer lowercases ASCII letters only
+_META_GATE = re.compile(r"<(?:title|meta|link|html)", re.I | re.A)
 
 
 def _metadata_doc(kinds, texts, refs):

@@ -54,6 +54,15 @@ def get_spark(app: str = "html_qt_spark", *, cpus: int | None = None,
     - driver memory from env SPARK_GRAFT_DRIVER_MEM, else the smaller of
       48 GB and half of physical memory: a local JVM sized past the
       host's RAM is OOM-killed instead of collecting garbage.
+    - local masters only: Python workers start through
+      ``plans/pydaemon.py``, which imports pyspark from the unpacked
+      ``$SPARK_HOME/python`` instead of ``pyspark.zip``.  Each task's
+      ``importlib.invalidate_caches()`` makes every zipimporter re-read
+      its archive, 0.1-0.3 s per task.  Under spark-submit the package
+      may reach workers only through ``--py-files``, which is on the
+      path only after the daemon starts, so Spark's daemon stays.  A
+      local worker must import ``html_qt_spark`` (run from the repo root
+      or put it on ``PYTHONPATH``), or every Python task fails.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
@@ -61,7 +70,9 @@ def get_spark(app: str = "html_qt_spark", *, cpus: int | None = None,
     # under spark-submit the master (cluster URL) comes from the submitter;
     # only force local[N] when launched as a bare python process
     if not os.environ.get("SPARK_ENV_LOADED"):
-        builder = builder.master(f"local[{cpus}]")
+        builder = (builder.master(f"local[{cpus}]")
+                   .config("spark.python.daemon.module",
+                           "html_qt_spark.plans.pydaemon"))
     builder = (
         builder
         .appName(app)

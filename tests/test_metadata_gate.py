@@ -135,7 +135,7 @@ EDGE_CASES = [
     "<ti\x00tle>nul in name</ti\x00tle>",
     "&lt;title&gt;escaped&lt;/title&gt;",
     '<linK rel=canonical href="https://x/y">',
-    # the tokenizer's str.lower() folds KELVIN SIGN to "k": a <link
+    # KELVIN SIGN is not an ASCII letter: not a <link, all-null metadata
     "<lin\u212a rel=canonical href=u>",
     "<p>a</p><meta name=description content=late>",
 ]

@@ -89,3 +89,29 @@ def test_reset_reuses_instance():
     t2, _ = tk.run()
     assert t1[0] == ("StartTag", "p", [], False)
     assert t2[0] == ("StartTag", "div", [], False)
+
+
+@pytest.mark.parametrize("ch", ["K", "İ", "ſ"])
+def test_names_lowercase_ascii_letters_only(ch):
+    # WHATWG lowercases ASCII upper alphas only; str.lower() would fold
+    # KELVIN SIGN to "k" and I WITH DOT ABOVE to "i" + U+0307
+    for html in (f"<LIN{ch} HREF{ch}=u>", f"<x><LIN{ch}\x00 HREF{ch}\x00=u>"):
+        tokens, _ = tokenize(html)
+        name, attrs = tokens[-1][1], tokens[-1][2]
+        assert name.startswith(f"lin{ch}"), tokens
+        assert attrs[0][0].startswith(f"href{ch}"), tokens
+    tokens, _ = tokenize(f"<!DOCTYPE {ch}HTML{ch}>")
+    assert tokens == [("DOCTYPE", f"{ch}html{ch}", None, None, True)]
+    tokens, _ = tokenize(f"<p>x</P{ch}>")
+    assert tokens[-1] == ("EndTag", f"p{ch}")
+
+
+def test_kelvin_sign_link_is_not_a_link():
+    from html_qt_spark.kernel.extractor import extract_metadata
+    from html_qt_spark.kernel.treebuilder import parse
+
+    assert extract_metadata(parse(
+        "<linK rel=canonical href=u>", collect_errors=False)) == \
+        (None, None, None, None)
+    assert extract_metadata(parse(
+        "<LINK rel=canonical href=u>", collect_errors=False))[2] == "u"
