@@ -46,33 +46,20 @@ from .entities import decode_numeric, match_named
 
 WHITESPACE = "\t\n\f "
 
-# Start tags that flip the tokenizer out of the data state (WHATWG
-# 13.2.5.1; the reference never implements these switches, see
-# htmltokenizer_p.h:88 — spec mode only).
-RCDATA_ELEMENTS = frozenset({"title", "textarea"})
-RAWTEXT_ELEMENTS = frozenset({"style", "xmp", "iframe", "noembed", "noframes"})
-
-# Foreign-content bookkeeping (WHATWG 13.2.6.5).  The tokenizer keeps a
-# lightweight mirror of the tree builder's foreign-context decisions so
-# its state switches (script-data/RAWTEXT/RCDATA) and the CDATA gate stay
-# in sync when an HTML breakout tag pops an unclosed <svg>/<math> subtree
-# or when parsing inside an HTML integration point.  Shared with
-# treebuilder.py (single source of truth for the breakout/IP sets).
-FOREIGN_BREAKOUT = frozenset(
-    """b big blockquote body br center code dd div dl dt em embed h1 h2 h3
-    h4 h5 h6 head hr i img li listing menu meta nobr ol p pre ruby s small
-    span strong strike sub sup table tt u ul var""".split()
-)
-# MathML text integration points: children parse as HTML
-MATHML_TEXT_IP = frozenset("mi mo mn ms mtext".split())
-# SVG HTML integration points (lowercase tag-name forms)
-SVG_HTML_IP = frozenset("foreignobject desc title".split())
-
-# start tags that need _emit_tag's full bookkeeping (state switches or
-# foreign-context transitions); everything else can take the direct-emit
-# fast path in _data_state when no foreign context is open
-_EMIT_SLOW_NAMES = (RCDATA_ELEMENTS | RAWTEXT_ELEMENTS
-                    | {"script", "plaintext", "svg", "math"})
+# Start tags that can take the tokenizer out of the data state (WHATWG
+# 13.2.6.2 / 13.2.6.4.7), mapped to the state they switch to; the
+# reference never implements these switches (htmltokenizer_p.h:88).
+# Whether a given tag switches is the tree builder's decision (svg
+# <title> is foreign, <style> in <select> is ignored): with a tree
+# attached the tokenizer hands it the tokens and applies its answer;
+# without one (``tokenize``) the tag name alone decides.
+TEXT_STATES = {
+    "title": "_rcdata_state", "textarea": "_rcdata_state",
+    "style": "_rawtext_state", "xmp": "_rawtext_state",
+    "iframe": "_rawtext_state", "noembed": "_rawtext_state",
+    "noframes": "_rawtext_state",
+    "script": "_script_data_state", "plaintext": "_plaintext_state",
+}
 
 # ------------------------------------------------------ run-scan regexes
 _DATA_RX = re.compile(r"[&<\x00]")
@@ -140,16 +127,17 @@ class HTMLTokenizer:
         "tag_name", "tag_is_end", "self_closing", "attrs", "attr_name",
         "attr_value", "comment", "doctype_name", "doctype_public",
         "doctype_system", "force_quirks", "last_start_tag", "temp_buf",
-        "state", "reference_compat", "cdata_ok", "collect_errors",
-        "_data_state_ref", "fstack",
+        "state", "reference_compat", "collect_errors", "_data_state_ref",
+        "tree", "fed",
     )
 
     def __init__(self, html_text: str = "", *, reference_compat: bool = False,
                  collect_errors: bool = True) -> None:
         self.reference_compat = reference_compat
         self.collect_errors = collect_errors
-        self.cdata_ok = False
-        self.fstack: list[str] = []
+        # tree builder fed at each TEXT_STATES start tag and at
+        # "<![CDATA[" (see _feed_tree); None: tokenize on names alone
+        self.tree = None
         self.reset(html_text)
 
     def reset(self, html_text: str) -> None:
@@ -175,10 +163,7 @@ class HTMLTokenizer:
         self.force_quirks = False
         self.last_start_tag = ""
         self.temp_buf: list[str] = []
-        # foreign-context stack: "svg"/"math" for foreign roots, "i:<name>"
-        # for HTML/text integration points (see _emit_tag)
-        self.fstack = []
-        self.cdata_ok = False
+        self.fed = 0  # tokens already handed to self.tree
         # stable bound-method ref: identity checks against self._data_state
         # would fail (a fresh bound method per attribute access)
         self._data_state_ref = self._data_state
@@ -187,13 +172,30 @@ class HTMLTokenizer:
     # ------------------------------------------------------------ plumbing
 
     def run(self) -> tuple[list[tuple], list[tuple[str, int]]]:
-        state = None
+        """Tokenize to EOF; returns the tokens not yet fed to ``tree``
+        (all of them without a tree) and the parse errors."""
         while True:
             st = self.state
             if not st():
                 break
         self._flush_chars()
+        # the bound-method refs point back at self: dropping them lets
+        # refcounting free the tokenizer (and its tokens) without the GC
+        self.state = self._data_state_ref = None
         return self.tokens, self.errors
+
+    def _feed_tree(self) -> str | None:
+        """Hand every token emitted so far to ``tree``; returns the
+        TEXT_STATES key it asked the tokenizer to switch to, if any."""
+        self._flush_chars()
+        tokens = self.tokens
+        tree = self.tree
+        tree.feed(tokens)
+        self.fed += len(tokens)
+        tokens.clear()  # in place: _data_state's hot loop holds a binding
+        switch = tree.tokenizer_switch
+        tree.tokenizer_switch = None
+        return switch
 
     def _err(self, code: str) -> None:
         if self.collect_errors:
@@ -233,8 +235,8 @@ class HTMLTokenizer:
         if buf:
             self.tokens.append(("Character", "".join(buf)))
             buf.clear()
-        # Emitting a tag always returns to the data state unless the start
-        # tag dictates an RCDATA/RAWTEXT/script/plaintext switch below.
+        # Emitting a tag always returns to the data state unless a
+        # TEXT_STATES start tag switches it below.
         self.state = self._data_state_ref
         name = self.tag_name
         if self.tag_is_end:
@@ -244,16 +246,6 @@ class HTMLTokenizer:
                 self._err("attributes-in-end-tag")
             if self.self_closing:
                 self._err("self-closing-flag-on-end-tag")
-            fstack = self.fstack
-            if fstack:
-                top = fstack[-1]
-                if name in ("svg", "math"):
-                    if top == name:
-                        fstack.pop()
-                elif top == "i:" + name:
-                    # closing an integration point: back to foreign rules
-                    fstack.pop()
-                self.cdata_ok = bool(fstack) and fstack[-1] in ("svg", "math")
             self.tokens.append(("EndTag", name))
         else:
             attrs = self.attrs
@@ -272,61 +264,10 @@ class HTMLTokenizer:
                     out.append((k, "".join(vparts)))
             self.tokens.append(("StartTag", name, out, self.self_closing))
             self.last_start_tag = name
-            # ---- foreign-content context mirror (WHATWG 13.2.6.5) ----
-            # CDATA sections are only legal while the adjusted current
-            # node is foreign; tree-dictated tokenizer switches (script/
-            # RAWTEXT/RCDATA/plaintext) only apply under HTML rules —
-            # i.e. outside foreign content OR inside an integration
-            # point.  This stack mirrors the tree builder's breakout and
-            # integration-point transitions so <script> after an HTML
-            # breakout (e.g. "<svg><div>…<script>") tokenizes as script
-            # data instead of leaking JS into extracted text.
-            fstack = self.fstack
-            # HTML rules applied to THIS tag when the stack top (before any
-            # push below) is not a foreign root — i.e. plain HTML or inside
-            # an integration point.
-            foreign_rules = bool(fstack) and fstack[-1] in ("svg", "math")
-            if foreign_rules:
-                if name in FOREIGN_BREAKOUT or (
-                        name == "font" and any(
-                            k in ("color", "face", "size") for k, _ in out)):
-                    # HTML breakout: the tree builder pops the foreign
-                    # subtree down to an integration point / HTML node
-                    while fstack and fstack[-1] in ("svg", "math"):
-                        fstack.pop()
-                elif not self.self_closing:
-                    ftop = fstack[-1]
-                    if ftop == "svg" and name in SVG_HTML_IP:
-                        fstack.append("i:" + name)
-                    elif ftop == "math" and name in MATHML_TEXT_IP:
-                        fstack.append("i:" + name)
-                    elif (ftop == "math" and name == "annotation-xml"
-                          and any(k == "encoding"
-                                  and v.lower() in ("text/html",
-                                                    "application/xhtml+xml")
-                                  for k, v in out)):
-                        fstack.append("i:" + name)
-                    elif name in ("svg", "math"):
-                        fstack.append(name)
-                self.cdata_ok = bool(fstack) and fstack[-1] in ("svg", "math")
-            elif name in ("svg", "math") and not self.self_closing:
-                # entering foreign content (from HTML or an integration pt)
-                fstack.append(name)
-                self.cdata_ok = True
-            if not self.reference_compat and not foreign_rules:
-                # tree-construction-dictated state switches the reference
-                # never implemented (htmltokenizer_p.h:88).  Inside
-                # svg/math foreign content these elements are ordinary
-                # (svg <title>/<style> are NOT RCDATA/RAWTEXT); inside an
-                # HTML/text integration point they switch again.
-                if name in RAWTEXT_ELEMENTS:
-                    self.state = self._rawtext_state
-                elif name in RCDATA_ELEMENTS:
-                    self.state = self._rcdata_state
-                elif name == "script":
-                    self.state = self._script_data_state
-                elif name == "plaintext":
-                    self.state = self._plaintext_state
+            if name in TEXT_STATES and not self.reference_compat:
+                switch = name if self.tree is None else self._feed_tree()
+                if switch:
+                    self.state = getattr(self, TEXT_STATES[switch])
 
     def _emit_comment(self) -> None:
         self._flush_chars()
@@ -443,29 +384,20 @@ class HTMLTokenizer:
                 else:
                     fm = None
                 if fm:
-                    name = fm.group(1).lower()
-                    if not self.fstack:
-                        # direct emit: fast end tags carry no attrs/flags
-                        # and outside foreign content touch no other state
-                        if charbuf:
-                            tokens.append(("Character", "".join(charbuf)))
-                            charbuf.clear()
-                        tokens.append(("EndTag", name))
-                        pos = fm.end()
-                        continue
-                    self._new_tag(is_end=True)
-                    self.tag_name = name
-                    self.pos = pos = fm.end()
-                    self._emit_tag()
-                    if self.state is not self._data_state_ref:
-                        return True
+                    # direct emit: fast end tags carry no attrs/flags and
+                    # touch no other state
+                    if charbuf:
+                        tokens.append(("Character", "".join(charbuf)))
+                        charbuf.clear()
+                    tokens.append(("EndTag", fm.group(1).lower()))
+                    pos = fm.end()
                     continue
                 fm = fast_start(html, start)
                 if fm:
                     name = fm.group(1).lower()
-                    if not self.fstack and name not in _EMIT_SLOW_NAMES:
-                        # direct emit: no state switch, no foreign
-                        # bookkeeping — the overwhelmingly common case
+                    if name not in TEXT_STATES:
+                        # direct emit: no state switch — the
+                        # overwhelmingly common case
                         if charbuf:
                             tokens.append(("Character", "".join(charbuf)))
                             charbuf.clear()
@@ -1243,7 +1175,12 @@ class HTMLTokenizer:
             self.state = self._doctype_state
         elif h.startswith("[CDATA[", p):
             self.pos = p + 7
-            if self.cdata_ok:
+            # a CDATA section opens only where the tree builder's current
+            # node is foreign (WHATWG 13.2.5.42); without a tree, never
+            tree = self.tree
+            if tree is not None:
+                self._feed_tree()
+            if tree is not None and tree.cdata_allowed():
                 self.state = self._cdata_section_state
             else:
                 self._err("expected-dashes-or-doctype")
@@ -1761,21 +1698,10 @@ class HTMLTokenizer:
 
 def tokenize(html_text: str, *, reference_compat: bool = False,
              collect_errors: bool = True,
-             last_start_tag: str = "", initial_state: str = "data",
              ) -> tuple[list[tuple], list[tuple[str, int]]]:
     """One-shot convenience wrapper (mirrors the reference's
-    tokenizer-only entry point, html-qt/htmltokenizer.h:88-92)."""
-    tk = HTMLTokenizer(html_text, reference_compat=reference_compat,
-                       collect_errors=collect_errors)
-    if last_start_tag:
-        tk.last_start_tag = last_start_tag
-    if initial_state != "data":
-        tk.state = {
-            "data": tk._data_state,
-            "rcdata": tk._rcdata_state,
-            "rawtext": tk._rawtext_state,
-            "script_data": tk._script_data_state,
-            "plaintext": tk._plaintext_state,
-            "cdata": tk._cdata_section_state,
-        }[initial_state]
-    return tk.run()
+    tokenizer-only entry point, html-qt/htmltokenizer.h:88-92).  No tree
+    builder is attached: TEXT_STATES tags switch on their name alone and
+    ``<![CDATA[`` is always a bogus comment."""
+    return HTMLTokenizer(html_text, reference_compat=reference_compat,
+                         collect_errors=collect_errors).run()

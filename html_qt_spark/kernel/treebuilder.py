@@ -28,12 +28,7 @@ from __future__ import annotations
 
 import re
 
-from .tokenizer import (
-    FOREIGN_BREAKOUT as _FOREIGN_BREAKOUT,
-    MATHML_TEXT_IP as _MATHML_TEXT_IP,
-    SVG_HTML_IP as _SVG_HTML_IP,
-    HTMLTokenizer,
-)
+from .tokenizer import TEXT_STATES, HTMLTokenizer
 
 # -------------------------------------------------------------- categories
 
@@ -173,11 +168,18 @@ _NON_WS_PREFIX_RX = re.compile(r"[^\t\n\f\r ]+")
 
 # ---------------- foreign content (SVG / MathML), WHATWG 13.2.6.5 -------
 
-# HTML breakout tags / integration points are shared with the tokenizer
-# (imported above): seeing a breakout tag inside foreign content pops the
-# foreign subtree and reprocesses in HTML (prevents an unclosed <svg> from
-# swallowing the rest of the page — an extraction-quality hazard), and the
-# tokenizer mirrors the same transitions for its state-switch gate.
+# HTML breakout tags: seeing one inside foreign content pops the foreign
+# subtree and reprocesses in HTML (prevents an unclosed <svg> from
+# swallowing the rest of the page — an extraction-quality hazard)
+_FOREIGN_BREAKOUT = frozenset(
+    """b big blockquote body br center code dd div dl dt em embed h1 h2 h3
+    h4 h5 h6 head hr i img li listing menu meta nobr ol p pre ruby s small
+    span strong strike sub sup table tt u ul var""".split()
+)
+# MathML text integration points: children parse as HTML
+_MATHML_TEXT_IP = frozenset("mi mo mn ms mtext".split())
+# SVG HTML integration points (lowercase tag-name forms)
+_SVG_HTML_IP = frozenset("foreignobject desc title".split())
 
 # SVG attribute case adjustment (WHATWG "adjust SVG attributes")
 _SVG_ATTR_ADJUST = {
@@ -232,6 +234,7 @@ class TreeBuilder:
         "head_id", "form_id", "pending_table_text", "ignore_lf",
         "quirks_mode", "doctype", "errors", "done", "fragment_root",
         "template_content", "template_modes", "fragment_context",
+        "tokenizer_switch",
     )
 
     def __init__(self, *, reference_compat: bool = False,
@@ -274,6 +277,10 @@ class TreeBuilder:
         # fragment parsing: the context element's tag name — the reset
         # algorithm substitutes it for the root node (spec 13.2.4.1)
         self.fragment_context: str | None = None
+        # TEXT_STATES key the tokenizer must switch to after the current
+        # feed: set where a start tag enters text mode or inserts
+        # <plaintext> (HTMLTokenizer._feed_tree reads and clears it)
+        self.tokenizer_switch: str | None = None
 
     # ------------------------------------------------------------ plumbing
 
@@ -732,9 +739,21 @@ class TreeBuilder:
     # --------------------------------------------------------- main drive
 
     def process(self, tokens: list[tuple]) -> None:
+        """Build the tree from a complete token list, then EOF."""
         if self.reference_compat:
             self._process_compat(tokens)
             return
+        self.feed(tokens)
+        self._process_eof()
+
+    def cdata_allowed(self) -> bool:
+        """Whether ``<![CDATA[`` opens a CDATA section here: the current
+        node is foreign (WHATWG 13.2.5.42)."""
+        oe = self.open_elements
+        return bool(oe) and self.ns[oe[-1]] != "html"
+
+    def feed(self, tokens: list[tuple]) -> None:
+        """Process ``tokens``; more may follow (no EOF)."""
         # hot loop: _process_token/_process_chars bodies inlined for the
         # dominant cases (plain HTML, in_body) — identical dispatch order,
         # one call frame less per token.  The out-of-line methods remain
@@ -766,14 +785,10 @@ class TreeBuilder:
                     self._process_foreign_tag(tok)
                 else:
                     tag_dispatch[self.mode](self, tok)
-                # RCDATA/RAWTEXT/script tags flip us into text mode; the
-                # tokenizer already emitted their contents as one Character
-                # token, which the next loop iteration routes to mode 'text'.
             elif kind == "Comment":
                 self._mode_comment(tok[1])
             elif kind == "DOCTYPE":
                 self._mode_doctype(tok)
-        self._process_eof()
 
     def _process_compat(self, tokens: list[tuple]) -> None:
         """Reference-shaped tree construction (reference_compat=True).
@@ -1181,25 +1196,17 @@ class TreeBuilder:
             if name in self._HEAD_VOID:
                 self._insert_element(name, list(tok[2]), push=False)
                 return
-            if name == "title":
+            if name in ("title", "noframes", "style", "script"):
+                # RCDATA / raw text / script data element
                 self._insert_element(name, list(tok[2]))
                 self.original_mode = self.mode
                 self.mode = "text"
+                self.tokenizer_switch = name
                 return
-            if name in ("noscript", "noframes", "style"):
-                if name == "noscript":
-                    # scripting disabled: parse children normally
-                    self._insert_element(name, list(tok[2]))
-                    self.mode = "in_head_noscript"
-                    return
+            if name == "noscript":
+                # scripting disabled: parse children normally
                 self._insert_element(name, list(tok[2]))
-                self.original_mode = self.mode
-                self.mode = "text"
-                return
-            if name == "script":
-                self._insert_element(name, list(tok[2]))
-                self.original_mode = self.mode
-                self.mode = "text"
+                self.mode = "in_head_noscript"
                 return
             if name == "template":
                 # simplified in_template: content stays INSIDE the
@@ -1433,6 +1440,7 @@ class TreeBuilder:
         if self._in_button_scope("p"):
             self._close_p()
         self._insert_element(name, attrs)
+        self.tokenizer_switch = name
 
     def _ibs_button(self, tok, name, attrs) -> None:
         if self._in_scope("button"):
@@ -1517,6 +1525,7 @@ class TreeBuilder:
         self.original_mode = self.mode
         self.frameset_ok = False
         self.mode = "text"
+        self.tokenizer_switch = name
 
     def _ibs_xmp(self, tok, name, attrs) -> None:
         if self._in_button_scope("p"):
@@ -1526,12 +1535,14 @@ class TreeBuilder:
         self._insert_element(name, attrs)
         self.original_mode = "in_body"
         self.mode = "text"
+        self.tokenizer_switch = name
 
     def _ibs_rawtext(self, tok, name, attrs) -> None:
         self.frameset_ok = False
         self._insert_element(name, attrs)
         self.original_mode = "in_body"
         self.mode = "text"
+        self.tokenizer_switch = name
 
     def _ibs_select(self, tok, name, attrs) -> None:
         self._reconstruct_formatting()
@@ -2339,60 +2350,20 @@ def parse_fragment(html_text: str, *, context: str = "body",
 
     Parses ``html_text`` as the contents of a ``context`` element: the
     tokenizer starts in the state the context dictates (RCDATA for
-    title/textarea, RAWTEXT for style/..., script data, PLAINTEXT,
-    foreign for svg/math), and tree construction starts in the insertion
-    mode the reset algorithm picks for the context.  The reference has
-    no fragment API (whole-document only, html-qt/htmlparser.cpp:51-58);
-    this is the engine extension that lets span-level HTML fragments
-    (e.g. a crawl that stores table cells or <option> lists) parse with
-    their real context semantics instead of as standalone documents.
+    title/textarea, RAWTEXT for style/..., script data, PLAINTEXT),
+    svg/math contexts parse their children as foreign content, and tree
+    construction starts in the insertion mode the reset algorithm picks
+    for the context.  The reference has no fragment API (whole-document
+    only, html-qt/htmlparser.cpp:51-58); this is the engine extension
+    that lets span-level HTML fragments (e.g. a crawl that stores table
+    cells or <option> lists) parse with their real context semantics
+    instead of as standalone documents.
 
     Returns a TreeBuilder whose <html> root node's children are the
     fragment; serialize with ``serialize_tree(tb, root=html_id)``.
     """
-    from .tokenizer import RAWTEXT_ELEMENTS, RCDATA_ELEMENTS
-
-    tk = HTMLTokenizer(html_text, reference_compat=reference_compat,
-                       collect_errors=collect_errors)
-    ctx = context.lower()
-    tk.last_start_tag = ctx  # appropriate-end-tag matching in text states
-    if not reference_compat:
-        if ctx in RCDATA_ELEMENTS:
-            tk.state = tk._rcdata_state
-        elif ctx in RAWTEXT_ELEMENTS:
-            tk.state = tk._rawtext_state
-        elif ctx == "script":
-            tk.state = tk._script_data_state
-        elif ctx == "plaintext":
-            tk.state = tk._plaintext_state
-    if ctx in ("svg", "math"):
-        tk.fstack.append(ctx)
-        tk.cdata_ok = True
-    tokens, _errors = tk.run()
-
-    tb = TreeBuilder(reference_compat=reference_compat,
-                     collect_errors=collect_errors)
-    root = tb._new_node("html", attrs=[])
-    tb._append(root, 0)
-    tb.open_elements.append(root)
-    tb.fragment_root = root  # serialize/extract from here
-    tb.fragment_context = ctx
-    tb.mode = _FRAGMENT_MODE.get(ctx, "in_body")
-    if ctx == "template" and not reference_compat:
-        # spec 13.4 step 11: a template context seeds the stack of
-        # template insertion modes, so table-structure routing and
-        # nested-template closes resolve exactly as in a document
-        tb.template_modes.append("in_template")
-    if ctx in ("svg", "math"):
-        # children of a foreign context parse as foreign content: give the
-        # dispatcher a foreign current node to route through (HTML
-        # breakout tags still escape to the html root, as in documents)
-        fid = tb._new_node(ctx, attrs=[], ns=ctx)
-        tb._append(fid, root)
-        tb.open_elements.append(fid)
-        tb.fragment_root = fid
-    tb.process(tokens)
-    return tb
+    return _parse(html_text, reference_compat, collect_errors,
+                  context.lower())[0]
 
 
 def parse(html_text: str, *, reference_compat: bool = False,
@@ -2400,19 +2371,53 @@ def parse(html_text: str, *, reference_compat: bool = False,
     """Parse one document: tokenizer → tree builder.
 
     Engine version of HTMLParser::parse (html-qt/htmlparser.cpp:51-58):
-    set text, run tokenizer, construct tree — except tokens flow as a
-    materialized list (the reference's dead ``tokenQueue``,
-    htmltokenizer_p.h:163, done right) so the tree builder is a separate,
-    testable stage.  Every caller takes this same path; there is no
-    second tree builder.
+    set text, run tokenizer, construct tree.  The tokenizer feeds the
+    tree builder its tokens at each start tag that may switch the
+    tokenizer's state and at ``<![CDATA[``, and the tree builder answers
+    (html5lib's design); every caller takes this same path.
     """
-    tk = HTMLTokenizer(html_text, reference_compat=reference_compat,
-                       collect_errors=collect_errors)
-    tokens, _tok_errors = tk.run()
+    return _parse(html_text, reference_compat, collect_errors)[0]
+
+
+def _parse(html_text: str, reference_compat: bool = False,
+           collect_errors: bool = True, context: str | None = None,
+           ) -> tuple[TreeBuilder, int, list[tuple[str, int]]]:
+    """The one tokenizer → tree builder run behind :func:`parse` and
+    :func:`parse_fragment` (``context`` set).  Returns the tree, the
+    token count and the tokenizer's parse errors."""
     tb = TreeBuilder(reference_compat=reference_compat,
                      collect_errors=collect_errors)
+    tk = HTMLTokenizer(html_text, reference_compat=reference_compat,
+                       collect_errors=collect_errors)
+    if context is not None:
+        tk.last_start_tag = context  # appropriate end tag in text states
+        if context in TEXT_STATES and not reference_compat:
+            tk.state = getattr(tk, TEXT_STATES[context])
+        root = tb._new_node("html", attrs=[])
+        tb._append(root, 0)
+        tb.open_elements.append(root)
+        tb.fragment_root = root  # serialize/extract from here
+        tb.fragment_context = context
+        tb.mode = _FRAGMENT_MODE.get(context, "in_body")
+        if context == "template" and not reference_compat:
+            # spec 13.4 step 11: a template context seeds the stack of
+            # template insertion modes, so table-structure routing and
+            # nested-template closes resolve exactly as in a document
+            tb.template_modes.append("in_template")
+        if context in ("svg", "math"):
+            # children of a foreign context parse as foreign content: give
+            # the dispatcher a foreign current node to route through (HTML
+            # breakout tags still escape to the html root, as in documents)
+            fid = tb._new_node(context, attrs=[], ns=context)
+            tb._append(fid, root)
+            tb.open_elements.append(fid)
+            tb.fragment_root = fid
+    if not reference_compat:
+        # the reference's tree never drives its tokenizer
+        tk.tree = tb  # tokenizer -> tree only: no reference cycle
+    tokens, errors = tk.run()
     tb.process(tokens)
-    return tb
+    return tb, tk.fed + len(tokens), errors
 
 
 # in-body start-tag dispatch: tag name -> unbound handler (built once at

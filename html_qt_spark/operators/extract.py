@@ -364,7 +364,7 @@ def _markdown_doc(kinds, texts, refs, *, max_span_bytes: int | None = None):
                 continue
             if max_span_bytes and len(html) > max_span_bytes:
                 raise ValueError(f"oversize-span:{len(html)}")
-            md = render_markdown(parse(html))
+            md = render_markdown(parse(html, collect_errors=False))
             if md:
                 blocks.append(md)
     except Exception as exc:  # noqa: BLE001 — poison pill
@@ -407,8 +407,7 @@ def _parse_stats_doc(kinds, texts, refs):
     n_nodes, n_parse_errors, error_codes).  A span whose tokenizer or
     tree builder raises adds no tokens or nodes, one parse error and
     the code ``exception:<ExcType>``."""
-    from html_qt_spark.kernel.tokenizer import HTMLTokenizer
-    from html_qt_spark.kernel.treebuilder import TreeBuilder
+    from html_qt_spark.kernel.treebuilder import _parse
 
     n_text = n_media = n_tokens = n_nodes = n_errs = 0
     codes: set[str] = set()
@@ -420,14 +419,12 @@ def _parse_stats_doc(kinds, texts, refs):
         if not html:
             continue
         try:
-            tokens, errors = HTMLTokenizer(html).run()
-            tb = TreeBuilder(collect_errors=True)
-            tb.process(tokens)
+            tb, n_tok, errors = _parse(html)
         except Exception as exc:  # noqa: BLE001 — poison pill
             n_errs += 1
             codes.add(f"exception:{type(exc).__name__}")
             continue
-        n_tokens += len(tokens)
+        n_tokens += n_tok
         n_nodes += len(tb.tag) - 1
         n_errs += len(errors) + len(tb.errors)
         codes.update(c for c, _ in errors)

@@ -60,9 +60,10 @@ def get_spark(app: str = "html_qt_spark", *, cpus: int | None = None,
       ``importlib.invalidate_caches()`` makes every zipimporter re-read
       its archive, 0.1-0.3 s per task.  Under spark-submit the package
       may reach workers only through ``--py-files``, which is on the
-      path only after the daemon starts, so Spark's daemon stays.  A
-      local worker must import ``html_qt_spark`` (run from the repo root
-      or put it on ``PYTHONPATH``), or every Python task fails.
+      path only after the daemon starts, so Spark's daemon stays.  The
+      package root goes on the workers' ``PYTHONPATH``
+      (``spark.executorEnv.PYTHONPATH``), so the daemon module imports
+      whatever the driver's working directory.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
@@ -72,7 +73,9 @@ def get_spark(app: str = "html_qt_spark", *, cpus: int | None = None,
     if not os.environ.get("SPARK_ENV_LOADED"):
         builder = (builder.master(f"local[{cpus}]")
                    .config("spark.python.daemon.module",
-                           "html_qt_spark.plans.pydaemon"))
+                           "html_qt_spark.plans.pydaemon")
+                   .config("spark.executorEnv.PYTHONPATH",
+                           str(Path(__file__).resolve().parents[2])))
     builder = (
         builder
         .appName(app)

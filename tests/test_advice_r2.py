@@ -1,8 +1,9 @@
 """Round-2 regressions for the four advisor findings (ADVICE.md r1→r2).
 
-1. Tokenizer foreign-context desync: HTML breakout tags and integration
-   points must re-enable script/RAWTEXT/RCDATA switches so JS/CSS never
-   leaks into extracted text (tokenizer.py foreign stack).
+1. Tokenizer foreign-context desync: HTML breakout tags, HTML end tags
+   that close foreign content and integration points must re-enable
+   script/RAWTEXT/RCDATA switches so JS/CSS never leaks into extracted
+   text (the tree builder decides every switch).
 2. O(n^2) per-char consumption in frameset character handlers.
 3. Meta-charset prescan must skip comments (WHATWG 13.2.3.2 step "comment").
 4. EOF in text mode (unterminated RCDATA/RAWTEXT) must pop + normalize.
@@ -38,6 +39,13 @@ def test_style_after_unclosed_svg_breakout_is_rawtext():
     joined = " ".join(s[1] or "" for s in spans)
     assert "css" not in joined and "content" not in joined
     assert "tail" in joined
+
+
+def test_script_after_end_tag_that_closes_svg_does_not_leak():
+    # </div> pops the unclosed <svg>: the script is HTML script data
+    assert extract_html(
+        "<div><svg></div><script>var x='<p>leak</p>';</script><p>after</p>"
+    ) == [("text", "after", None)]
 
 
 def test_cdata_not_latched_after_breakout():

@@ -156,12 +156,12 @@ def test_parse_stats_poison_pill(monkeypatch):
     """A span the tokenizer raises on adds one parse error and its
     exception code; the task goes on and other documents' rows are
     unchanged."""
-    from html_qt_spark.kernel import tokenizer
+    from html_qt_spark.kernel import treebuilder
 
     rb = _batch(DOCS)
     want = _per_doc_batch(rb, _parse_stats_doc, DOC_STATS_SCHEMA).to_pylist()
 
-    real = tokenizer.HTMLTokenizer
+    real = treebuilder.HTMLTokenizer
 
     class Poisoned(real):
         def __init__(self, html, *a, **kw):
@@ -169,7 +169,7 @@ def test_parse_stats_poison_pill(monkeypatch):
                 raise RuntimeError("poison")
             super().__init__(html, *a, **kw)
 
-    monkeypatch.setattr(tokenizer, "HTMLTokenizer", Poisoned)
+    monkeypatch.setattr(treebuilder, "HTMLTokenizer", Poisoned)
     got = _per_doc_batch(rb, _parse_stats_doc, DOC_STATS_SCHEMA).to_pylist()
     assert got[1:] == want[1:]
     first = _parse_stats_doc(["text"], [DOCS[0][1][0][1]], [None])

@@ -19,7 +19,8 @@ TAGS = ["div", "p", "b", "i", "a", "ul", "li", "table", "tr", "td",
         "span", "h1", "em", "form", "select", "option", "script",
         "style", "title", "textarea", "pre", "br", "img", "nav",
         # r2: foreign content, integration points, frameset, template —
-        # the new tokenizer fstack / compat / EOF paths
+        # the tree builder's tokenizer switches and CDATA answers, the
+        # compat and EOF paths
         "svg", "math", "foreignObject", "mi", "mtext", "annotation-xml",
         "template", "frameset", "frame", "noframes", "desc", "g", "font"]
 WORDS = ["alpha", "beta", "gamma", "&amp;", "&#65;", "&unknown;", "<",

@@ -87,3 +87,32 @@ def test_get_spark_worker_imports_unpacked_pyspark():
     assert row.file.startswith(UNPACKED + os.sep), row.file
     assert not [k for k in row.zips if "pyspark.zip" in k or ".jar" in k], \
         row.zips
+
+
+_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})
+from html_qt_spark.plans.session import get_spark
+spark = get_spark(cpus=1, shuffle_partitions=1)
+spark.sparkContext.setLogLevel("ERROR")
+rows = spark.range(3, numPartitions=1).mapInArrow(
+    lambda batches: batches, "id long").collect()
+print("ids", sorted(r.id for r in rows))
+spark.stop()
+"""
+
+
+def test_worker_imports_package_from_any_driver_directory(tmp_path):
+    # the driver finds html_qt_spark only through its own sys.path edit;
+    # get_spark must hand the package root to the workers, which start
+    # as `python -m html_qt_spark.plans.pydaemon`
+    import subprocess
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _DRIVER.format(repo=repo)], cwd=tmp_path,
+        env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ids [0, 1, 2]" in proc.stdout, proc.stdout

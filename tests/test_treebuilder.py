@@ -9,12 +9,13 @@ html-qt/htmlparser.cpp:19-41), implicit html/head/body synthesis
 
 from __future__ import annotations
 
+import gc
 from pathlib import Path
 
 import pytest
 
 from html_qt_spark.kernel.serialize import serialize_tree
-from html_qt_spark.kernel.treebuilder import parse
+from html_qt_spark.kernel.treebuilder import parse, parse_fragment
 
 FIXTURE_DIR = Path(__file__).parent / "fixtures" / "tree-construction"
 
@@ -37,6 +38,27 @@ def _load_cases():
 def test_tree_construction(data, expected):
     got = serialize_tree(parse(data))
     assert got == expected, f"input={data!r}\n--- got ---\n{got}\n--- want ---\n{expected}"
+
+
+def test_parse_leaves_no_reference_cycle():
+    # the tokenizer links to the tree it feeds, never back, and drops its
+    # bound-method self references on exit: a parse is freed by
+    # refcounting alone, so the cyclic GC never has to walk parsed trees
+    from perfbench.corpus import html_corpus
+
+    texts = [s["text"] for s in html_corpus(301, n=1)[0]["spans"]
+             if s["kind"] == "text"]
+    texts.append("<svg><![CDATA[a]]></svg><script>b</script><title>c")
+    gc.collect()
+    gc.disable()
+    try:
+        for text in texts:
+            parse(text)
+            parse_fragment(text, context="div")
+            parse_fragment(text, context="svg")
+        assert gc.collect() == 0
+    finally:
+        gc.enable()
 
 
 def test_parent_pointers_consistent():

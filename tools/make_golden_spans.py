@@ -33,9 +33,8 @@ import pyarrow.parquet as pq
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from html_qt_spark.kernel.tokenizer import HTMLTokenizer  # noqa: E402
 from html_qt_spark.kernel.treebuilder import (  # noqa: E402
-    TreeBuilder,
+    _parse,
     parse,
     parse_fragment,
 )
@@ -181,11 +180,8 @@ def golden_parse_stats(rows: list[tuple]) -> dict:
         acc = per_doc.setdefault(doc_id, [0, 0, 0, set()])
         if kind == "media" or not text:
             continue
-        tk = HTMLTokenizer(text)
-        tokens, errors = tk.run()
-        tb = TreeBuilder(collect_errors=True)
-        tb.process(tokens)
-        acc[0] += len(tokens)
+        tb, n_tokens, errors = _parse(text)
+        acc[0] += n_tokens
         acc[1] += len(tb.tag) - 1
         acc[2] += len(errors) + len(tb.errors)
         acc[3].update(c for c, _ in errors)
