@@ -98,8 +98,8 @@ def extract_spans(
 
     Single fused pass: the DFS visits nodes in document order, so block
     assembly runs inline at each text/media/block event instead of
-    materializing an intermediate event list (the flush sites below are
-    the inlined equivalent of the former replay loop's flush()).
+    materializing an intermediate event list; the four flush sites below
+    (block change, media span, block entry, end) share ``keep``.
     """
     tag = tb.tag
     children = tb.children
@@ -107,6 +107,14 @@ def extract_spans(
     attrs = tb.attrs
 
     spans: list[tuple[str, str | None, str | None]] = []
+
+    def keep(parts: list[str], words: int, link_words: int) -> None:
+        # a finished block is a span unless too short or too link-dense
+        block_text = _norm("".join(parts))
+        if block_text and words >= MIN_WORDS \
+                and link_words / (words or 1) <= MAX_LINK_DENSITY:
+            spans.append(("text", block_text, None))
+
     cur_block = -1
     cur_parts: list[str] = []
     cur_link_words = 0
@@ -124,12 +132,7 @@ def extract_spans(
                     if block_id != cur_block:
                         # flush: previous block ended
                         if cur_parts:
-                            block_text = _norm("".join(cur_parts))
-                            if block_text and cur_words >= MIN_WORDS \
-                                    and (cur_link_words
-                                         / (cur_words or 1)
-                                         <= MAX_LINK_DENSITY):
-                                spans.append(("text", block_text, None))
+                            keep(cur_parts, cur_words, cur_link_words)
                             cur_parts = []
                             cur_link_words = 0
                             cur_words = 0
@@ -152,11 +155,7 @@ def extract_spans(
                                 if k == "alt"), None)
                     # flush, then emit the media span at its position
                     if cur_parts:
-                        block_text = _norm("".join(cur_parts))
-                        if block_text and cur_words >= MIN_WORDS \
-                                and (cur_link_words / (cur_words or 1)
-                                     <= MAX_LINK_DENSITY):
-                            spans.append(("text", block_text, None))
+                        keep(cur_parts, cur_words, cur_link_words)
                         cur_parts = []
                         cur_link_words = 0
                         cur_words = 0
@@ -176,11 +175,7 @@ def extract_spans(
                 # merge (found by the independent recursive oracle,
                 # tests/oracle.py)
                 if cur_parts:
-                    block_text = _norm("".join(cur_parts))
-                    if block_text and cur_words >= MIN_WORDS \
-                            and (cur_link_words / (cur_words or 1)
-                                 <= MAX_LINK_DENSITY):
-                        spans.append(("text", block_text, None))
+                    keep(cur_parts, cur_words, cur_link_words)
                     cur_parts = []
                     cur_link_words = 0
                     cur_words = 0
@@ -194,10 +189,7 @@ def extract_spans(
                     stack.append((ch, block_id, link_depth, boiler_depth))
     # final flush
     if cur_parts:
-        block_text = _norm("".join(cur_parts))
-        if block_text and cur_words >= MIN_WORDS \
-                and (cur_link_words / (cur_words or 1) <= MAX_LINK_DENSITY):
-            spans.append(("text", block_text, None))
+        keep(cur_parts, cur_words, cur_link_words)
     return spans
 
 

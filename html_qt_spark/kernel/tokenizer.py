@@ -126,9 +126,9 @@ class HTMLTokenizer:
         "html", "pos", "n", "tokens", "errors", "_charbuf",
         "tag_name", "tag_is_end", "self_closing", "attrs", "attr_name",
         "attr_value", "comment", "doctype_name", "doctype_public",
-        "doctype_system", "force_quirks", "last_start_tag", "temp_buf",
-        "state", "reference_compat", "collect_errors", "_data_state_ref",
-        "tree", "fed",
+        "doctype_system", "doctype_keyword", "force_quirks",
+        "last_start_tag", "temp_buf", "state", "return_state",
+        "reference_compat", "collect_errors", "_data_state_ref", "tree", "fed",
     )
 
     def __init__(self, html_text: str = "", *, reference_compat: bool = False,
@@ -160,6 +160,7 @@ class HTMLTokenizer:
         self.doctype_name: list[str] | None = None
         self.doctype_public: list[str] | None = None
         self.doctype_system: list[str] | None = None
+        self.doctype_keyword = ""  # "public" | "system": the id being read
         self.force_quirks = False
         self.last_start_tag = ""
         self.temp_buf: list[str] = []
@@ -181,7 +182,7 @@ class HTMLTokenizer:
         self._flush_chars()
         # the bound-method refs point back at self: dropping them lets
         # refcounting free the tokenizer (and its tokens) without the GC
-        self.state = self._data_state_ref = None
+        self.state = self._data_state_ref = self.return_state = None
         return self.tokens, self.errors
 
     def _feed_tree(self) -> str | None:
@@ -264,10 +265,20 @@ class HTMLTokenizer:
                     out.append((k, "".join(vparts)))
             self.tokens.append(("StartTag", name, out, self.self_closing))
             self.last_start_tag = name
-            if name in TEXT_STATES and not self.reference_compat:
-                switch = name if self.tree is None else self._feed_tree()
-                if switch:
-                    self.state = getattr(self, TEXT_STATES[switch])
+            if name in TEXT_STATES:
+                self._text_switch(name)
+
+    def _text_switch(self, name: str) -> bool:
+        """After a TEXT_STATES start tag: enter the text state the tree
+        builder asks for (without a tree, the one ``name`` maps to).
+        Returns whether the state changed."""
+        if self.reference_compat:
+            return False
+        switch = name if self.tree is None else self._feed_tree()
+        if not switch:
+            return False
+        self.state = getattr(self, TEXT_STATES[switch])
+        return True
 
     def _emit_comment(self) -> None:
         self._flush_chars()
@@ -394,57 +405,39 @@ class HTMLTokenizer:
                     continue
                 fm = fast_start(html, start)
                 if fm:
+                    # direct emit; only a TEXT_STATES name may then
+                    # switch state
                     name = fm.group(1).lower()
-                    if name not in TEXT_STATES:
-                        # direct emit: no state switch — the
-                        # overwhelmingly common case
-                        if charbuf:
-                            tokens.append(("Character", "".join(charbuf)))
-                            charbuf.clear()
-                        blob = fm.group(2)
-                        if blob:
-                            out: list[tuple[str, str]] = []
-                            seen = None
-                            for am in _FAST_ATTR.finditer(blob):
-                                v = am.group(2)
-                                if v is None:
-                                    v = am.group(3)
-                                if v is None:
-                                    v = am.group(4)
-                                k = am.group(1).lower()
-                                if seen is None:
-                                    seen = {k}
-                                elif k in seen:
-                                    self.pos = start + 1  # error position
-                                    self._err("duplicate-attribute")
-                                    continue
-                                else:
-                                    seen.add(k)
-                                out.append((k, v if v is not None else ""))
-                        else:
-                            out = []
-                        tokens.append(
-                            ("StartTag", name, out, fm.group(3) == "/"))
-                        self.last_start_tag = name
-                        pos = fm.end()
-                        continue
-                    self._new_tag(is_end=False)
-                    self.tag_name = name
+                    if charbuf:
+                        tokens.append(("Character", "".join(charbuf)))
+                        charbuf.clear()
                     blob = fm.group(2)
                     if blob:
-                        attrs = self.attrs
+                        out: list[tuple[str, str]] = []
+                        seen = None
                         for am in _FAST_ATTR.finditer(blob):
                             v = am.group(2)
                             if v is None:
                                 v = am.group(3)
                             if v is None:
                                 v = am.group(4)
-                            attrs.append([am.group(1).lower(),
-                                          [v] if v is not None else []])
-                    self.self_closing = fm.group(3) == "/"
-                    self.pos = pos = fm.end()
-                    self._emit_tag()
-                    if self.state is not self._data_state_ref:
+                            k = am.group(1).lower()
+                            if seen is None:
+                                seen = {k}
+                            elif k in seen:
+                                self.pos = start + 1  # error position
+                                self._err("duplicate-attribute")
+                                continue
+                            else:
+                                seen.add(k)
+                            out.append((k, v if v is not None else ""))
+                    else:
+                        out = []
+                    tokens.append(("StartTag", name, out, fm.group(3) == "/"))
+                    self.last_start_tag = name
+                    pos = fm.end()
+                    if name in TEXT_STATES and self._text_switch(name):
+                        self.pos = pos
                         return True
                     continue
                 self.pos = start + 1
@@ -479,7 +472,8 @@ class HTMLTokenizer:
         self.pos = m.start() + 1
         c = m.group()
         if c == "<":
-            self.state = self._rcdata_lt_state
+            self.return_state = self._rcdata_state
+            self.state = self._text_lt_state
         elif c == "&":
             t = self._consume_charref()
             self._chars(t if t is not None else "&")
@@ -499,7 +493,8 @@ class HTMLTokenizer:
             self._chars(self.html[self.pos:m.start()])
         self.pos = m.start() + 1
         if m.group() == "<":
-            self.state = self._rawtext_lt_state
+            self.return_state = self._rawtext_state
+            self.state = self._text_lt_state
         else:
             self._err("invalid-codepoint")
             self._chars("�")
@@ -514,29 +509,33 @@ class HTMLTokenizer:
         self.pos = self.n
         return False
 
-    # ------------------------------------------- rcdata/rawtext end tags
+    # ------------------------------------------ end tags of the text states
+    # WHATWG writes the "less-than sign", "end tag open" and "end tag name"
+    # states out once each for RCDATA, RAWTEXT, script data and escaped
+    # script data; they differ only in the state they fall back to, which
+    # is ``return_state`` here (set by _rcdata_state, _rawtext_state,
+    # _script_lt_state and _script_escaped_lt_state)
 
-    def _rcdata_lt_state(self) -> bool:
+    def _text_lt_state(self) -> bool:
         if self.pos < self.n and self.html[self.pos] == "/":
             self.pos += 1
             self.temp_buf = []
-            self.state = self._rcdata_end_tag_open_state
+            self.state = self._text_end_tag_open_state
         else:
             self._chars("<")
-            self.state = self._rcdata_state
+            self.state = self.return_state
         return True
 
-    def _rcdata_end_tag_open_state(self) -> bool:
+    def _text_end_tag_open_state(self) -> bool:
         if self.pos < self.n and _ALPHA.match(self.html, self.pos):
             self._new_tag(is_end=True)
-            self.state = self._rcdata_end_tag_name_state
+            self.state = self._text_end_tag_name_state
         else:
             self._chars("</")
-            self.state = self._rcdata_state
+            self.state = self.return_state
         return True
 
-    def _generic_end_tag_name(self, back_state) -> bool:
-        """Shared RCDATA/RAWTEXT/script-data end-tag-name logic."""
+    def _text_end_tag_name_state(self) -> bool:
         m = _TAG_NAME_RUN.match(self.html, self.pos)
         run = ""
         if m:
@@ -566,36 +565,10 @@ class HTMLTokenizer:
         elif appropriate and c == ">":
             self.pos += 1
             self._emit_tag()
-            self.state = self._data_state
         else:
             self._chars("</" + "".join(self.temp_buf))
-            self.state = back_state
+            self.state = self.return_state
         return True
-
-    def _rcdata_end_tag_name_state(self) -> bool:
-        return self._generic_end_tag_name(self._rcdata_state)
-
-    def _rawtext_lt_state(self) -> bool:
-        if self.pos < self.n and self.html[self.pos] == "/":
-            self.pos += 1
-            self.temp_buf = []
-            self.state = self._rawtext_end_tag_open_state
-        else:
-            self._chars("<")
-            self.state = self._rawtext_state
-        return True
-
-    def _rawtext_end_tag_open_state(self) -> bool:
-        if self.pos < self.n and _ALPHA.match(self.html, self.pos):
-            self._new_tag(is_end=True)
-            self.state = self._rawtext_end_tag_name_state
-        else:
-            self._chars("</")
-            self.state = self._rawtext_state
-        return True
-
-    def _rawtext_end_tag_name_state(self) -> bool:
-        return self._generic_end_tag_name(self._rawtext_state)
 
     # ----------------------------------------------------- script data
 
@@ -617,49 +590,16 @@ class HTMLTokenizer:
         return True
 
     def _script_lt_state(self) -> bool:
-        c = self.html[self.pos] if self.pos < self.n else ""
-        if c == "/":
-            self.pos += 1
-            self.temp_buf = []
-            self.state = self._script_end_tag_open_state
-        elif c == "!":
-            self.pos += 1
-            self._chars("<!")
-            self.state = self._script_escape_start_state
-        else:
-            self._chars("<")
-            self.state = self._script_data_state
-        return True
-
-    def _script_end_tag_open_state(self) -> bool:
-        if self.pos < self.n and _ALPHA.match(self.html, self.pos):
-            self._new_tag(is_end=True)
-            self.state = self._script_end_tag_name_state
-        else:
-            self._chars("</")
-            self.state = self._script_data_state
-        return True
-
-    def _script_end_tag_name_state(self) -> bool:
-        return self._generic_end_tag_name(self._script_data_state)
-
-    def _script_escape_start_state(self) -> bool:
-        if self.pos < self.n and self.html[self.pos] == "-":
-            self.pos += 1
-            self._chars("-")
-            self.state = self._script_escape_start_dash_state
-        else:
-            self.state = self._script_data_state
-        return True
-
-    def _script_escape_start_dash_state(self) -> bool:
-        if self.pos < self.n and self.html[self.pos] == "-":
-            self.pos += 1
-            self._chars("-")
+        self.return_state = self._script_data_state
+        if self.html.startswith("!--", self.pos):
+            # the script data escape start and escape start dash states
+            # as one lookahead: "<!" or "<!-" without the second dash is
+            # just text, which script data then emits anyway
+            self.pos += 3
+            self._chars("<!--")
             self.state = self._script_escaped_dash_dash_state
-        else:
-            self.state = self._script_data_state
-        return True
+            return True
+        return self._text_lt_state()
 
     def _script_escaped_state(self) -> bool:
         m = _SCRIPT_ESC_RX.search(self.html, self.pos)
@@ -726,48 +666,40 @@ class HTMLTokenizer:
         return True
 
     def _script_escaped_lt_state(self) -> bool:
-        c = self.html[self.pos] if self.pos < self.n else ""
-        if c == "/":
-            self.pos += 1
-            self.temp_buf = []
-            self.state = self._script_escaped_end_tag_open_state
-        elif c and _ALPHA.match(c):
+        self.return_state = self._script_escaped_state
+        if self.pos < self.n and _ALPHA.match(self.html, self.pos):
             self._chars("<")
             self.temp_buf = []
             self.state = self._script_double_escape_start_state
-        else:
-            self._chars("<")
-            self.state = self._script_escaped_state
-        return True
+            return True
+        return self._text_lt_state()
 
-    def _script_escaped_end_tag_open_state(self) -> bool:
-        if self.pos < self.n and _ALPHA.match(self.html, self.pos):
-            self._new_tag(is_end=True)
-            self.state = self._script_escaped_end_tag_name_state
-        else:
-            self._chars("</")
-            self.state = self._script_escaped_state
-        return True
-
-    def _script_escaped_end_tag_name_state(self) -> bool:
-        return self._generic_end_tag_name(self._script_escaped_state)
-
-    def _script_double_escape_start_state(self) -> bool:
+    def _script_double_escape_toggle(self, if_script, otherwise) -> bool:
+        # WHATWG's script data double escape start and double escape end
+        # states: the same scan, with the two outcomes swapped
         c = self.html[self.pos] if self.pos < self.n else ""
         if c and (c in WHITESPACE or c in "/>"):
             self.pos += 1
             self._chars(c)
             if "".join(self.temp_buf).lower() == "script":
-                self.state = self._script_double_escaped_state
+                self.state = if_script
             else:
-                self.state = self._script_escaped_state
+                self.state = otherwise
         elif c and _ALPHA.match(c):
             self.pos += 1
             self.temp_buf.append(c)
             self._chars(c)
         else:
-            self.state = self._script_escaped_state
+            self.state = otherwise
         return True
+
+    def _script_double_escape_start_state(self) -> bool:
+        return self._script_double_escape_toggle(
+            self._script_double_escaped_state, self._script_escaped_state)
+
+    def _script_double_escape_end_state(self) -> bool:
+        return self._script_double_escape_toggle(
+            self._script_escaped_state, self._script_double_escaped_state)
 
     def _script_double_escaped_state(self) -> bool:
         m = _SCRIPT_ESC_RX.search(self.html, self.pos)
@@ -842,23 +774,6 @@ class HTMLTokenizer:
             self._chars("/")
             self.temp_buf = []
             self.state = self._script_double_escape_end_state
-        else:
-            self.state = self._script_double_escaped_state
-        return True
-
-    def _script_double_escape_end_state(self) -> bool:
-        c = self.html[self.pos] if self.pos < self.n else ""
-        if c and (c in WHITESPACE or c in "/>"):
-            self.pos += 1
-            self._chars(c)
-            if "".join(self.temp_buf).lower() == "script":
-                self.state = self._script_escaped_state
-            else:
-                self.state = self._script_double_escaped_state
-        elif c and _ALPHA.match(c):
-            self.pos += 1
-            self.temp_buf.append(c)
-            self._chars(c)
         else:
             self.state = self._script_double_escaped_state
         return True
@@ -1318,14 +1233,18 @@ class HTMLTokenizer:
 
     # ------------------------------------------------------------- doctype
 
+    def _eof_in_doctype(self, code: str = "eof-in-doctype") -> bool:
+        # EOF in any DOCTYPE state: the DOCTYPE is emitted, forcing quirks
+        self._err(code)
+        self.force_quirks = True
+        self._emit_doctype()
+        return False
+
     def _doctype_state(self) -> bool:
         # html-qt/htmltokenizer.cpp:843-868
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("expected-doctype-name-but-got-eof")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype("expected-doctype-name-but-got-eof")
         if c in WHITESPACE:
             self.pos += 1
             self.state = self._before_doctype_name_state
@@ -1341,10 +1260,7 @@ class HTMLTokenizer:
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("expected-doctype-name-but-got-eof")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype("expected-doctype-name-but-got-eof")
         if c == ">":
             self.pos += 1
             self._err("expected-doctype-name-but-got-right-bracket")
@@ -1370,10 +1286,7 @@ class HTMLTokenizer:
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype-name")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype("eof-in-doctype-name")
         self.pos += 1
         if c in WHITESPACE:
             self.state = self._after_doctype_name_state
@@ -1391,10 +1304,7 @@ class HTMLTokenizer:
         if m:
             self.pos = m.end()
         if self.pos >= self.n:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
         c = self.html[self.pos]
         if c == ">":
             self.pos += 1
@@ -1402,12 +1312,10 @@ class HTMLTokenizer:
             self.state = self._data_state
             return True
         probe = self.html[self.pos:self.pos + 6].lower()
-        if probe == "public":
+        if probe == "public" or probe == "system":
             self.pos += 6
-            self.state = self._after_doctype_public_keyword_state
-        elif probe == "system":
-            self.pos += 6
-            self.state = self._after_doctype_system_keyword_state
+            self.doctype_keyword = probe
+            self.state = self._after_doctype_keyword_state
         else:
             self._err("expected-space-or-right-bracket-in-doctype")
             self.force_quirks = True
@@ -1415,58 +1323,43 @@ class HTMLTokenizer:
             self.state = self._bogus_doctype_state
         return True
 
-    def _after_doctype_public_keyword_state(self) -> bool:
-        # html-qt/htmltokenizer.cpp:1004-1045
+    # WHATWG writes the states from the PUBLIC or SYSTEM keyword up to the
+    # closing quote of its identifier out twice, differing only in the
+    # identifier they fill; here ``doctype_keyword`` names it
+
+    def _after_doctype_keyword_state(self) -> bool:
+        # html-qt/htmltokenizer.cpp:1004-1045,1232-1270
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
+        self.pos += 1
         if c in WHITESPACE:
-            self.pos += 1
-            self.state = self._before_doctype_public_id_state
-        elif c == '"':
-            self.pos += 1
+            self.state = self._before_doctype_id_state
+        elif c == '"' or c == "'":
             self._err("unexpected-char-in-doctype")
-            self.doctype_public = []
-            self.state = self._doctype_public_id_dq_state
-        elif c == "'":
-            self.pos += 1
-            self._err("unexpected-char-in-doctype")
-            self.doctype_public = []
-            self.state = self._doctype_public_id_sq_state
+            self._open_doctype_id(c)
         elif c == ">":
-            self.pos += 1
             self._err("unexpected-end-of-doctype")
             self.force_quirks = True
             self._emit_doctype()
             self.state = self._data_state
         else:
-            self.pos += 1
             self._err("unexpected-char-in-doctype")
             self.force_quirks = True
             self.state = self._bogus_doctype_state
         return True
 
-    def _before_doctype_public_id_state(self) -> bool:
-        # html-qt/htmltokenizer.cpp:1047-1087
+    def _before_doctype_id_state(self) -> bool:
+        # html-qt/htmltokenizer.cpp:1047-1087,1272-1311
         m = _WS_RUN.match(self.html, self.pos)
         if m:
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
         self.pos += 1
-        if c == '"':
-            self.doctype_public = []
-            self.state = self._doctype_public_id_dq_state
-        elif c == "'":
-            self.doctype_public = []
-            self.state = self._doctype_public_id_sq_state
+        if c == '"' or c == "'":
+            self._open_doctype_id(c)
         elif c == ">":
             self._err("unexpected-end-of-doctype")
             self.force_quirks = True
@@ -1478,24 +1371,29 @@ class HTMLTokenizer:
             self.state = self._bogus_doctype_state
         return True
 
-    def _doctype_id_generic(self, run_rx, quote: str, which: str,
-                            after_state) -> bool:
-        # shared public/system id accumulation
-        # (html-qt/htmltokenizer.cpp:1089-1151,1313-1379)
-        buf = self.doctype_public if which == "public" else self.doctype_system
+    def _open_doctype_id(self, quote: str) -> None:
+        if self.doctype_keyword == "public":
+            self.doctype_public = []
+        else:
+            self.doctype_system = []
+        self.state = (self._doctype_id_dq_state if quote == '"'
+                      else self._doctype_id_sq_state)
+
+    def _doctype_id(self, run_rx, quote: str) -> bool:
+        # html-qt/htmltokenizer.cpp:1089-1151,1313-1379
+        public = self.doctype_keyword == "public"
+        buf = self.doctype_public if public else self.doctype_system
         m = run_rx.match(self.html, self.pos)
         if m:
             buf.append(m.group())
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
         self.pos += 1
         if c == quote:
-            self.state = after_state
+            self.state = (self._after_doctype_public_id_state if public
+                          else self._after_doctype_system_id_state)
         elif c == ">":
             self._err("unexpected-end-of-doctype")
             self.force_quirks = True
@@ -1506,41 +1404,28 @@ class HTMLTokenizer:
             buf.append("�")
         return True
 
-    def _doctype_public_id_dq_state(self) -> bool:
-        return self._doctype_id_generic(_ID_DQ_RUN, '"', "public",
-                                        self._after_doctype_public_id_state)
+    def _doctype_id_dq_state(self) -> bool:
+        return self._doctype_id(_ID_DQ_RUN, '"')
 
-    def _doctype_public_id_sq_state(self) -> bool:
-        return self._doctype_id_generic(_ID_SQ_RUN, "'", "public",
-                                        self._after_doctype_public_id_state)
+    def _doctype_id_sq_state(self) -> bool:
+        return self._doctype_id(_ID_SQ_RUN, "'")
 
     def _after_doctype_public_id_state(self) -> bool:
         # html-qt/htmltokenizer.cpp:1153-1191
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
+        self.pos += 1
         if c in WHITESPACE:
-            self.pos += 1
             self.state = self._between_doctype_public_system_state
         elif c == ">":
-            self.pos += 1
             self._emit_doctype()
             self.state = self._data_state
-        elif c == '"':
-            self.pos += 1
+        elif c == '"' or c == "'":
             self._err("unexpected-char-in-doctype")
-            self.doctype_system = []
-            self.state = self._doctype_system_id_dq_state
-        elif c == "'":
-            self.pos += 1
-            self._err("unexpected-char-in-doctype")
-            self.doctype_system = []
-            self.state = self._doctype_system_id_sq_state
+            self.doctype_keyword = "system"
+            self._open_doctype_id(c)
         else:
-            self.pos += 1
             self._err("unexpected-char-in-doctype")
             self.force_quirks = True
             self.state = self._bogus_doctype_state
@@ -1553,96 +1438,19 @@ class HTMLTokenizer:
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
         self.pos += 1
         if c == ">":
             self._emit_doctype()
             self.state = self._data_state
-        elif c == '"':
-            self.doctype_system = []
-            self.state = self._doctype_system_id_dq_state
-        elif c == "'":
-            self.doctype_system = []
-            self.state = self._doctype_system_id_sq_state
+        elif c == '"' or c == "'":
+            self.doctype_keyword = "system"
+            self._open_doctype_id(c)
         else:
             self._err("unexpected-char-in-doctype")
             self.force_quirks = True
             self.state = self._bogus_doctype_state
         return True
-
-    def _after_doctype_system_keyword_state(self) -> bool:
-        # html-qt/htmltokenizer.cpp:1232-1270
-        c = self.html[self.pos] if self.pos < self.n else None
-        if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
-        if c in WHITESPACE:
-            self.pos += 1
-            self.state = self._before_doctype_system_id_state
-        elif c == '"':
-            self.pos += 1
-            self._err("unexpected-char-in-doctype")
-            self.doctype_system = []
-            self.state = self._doctype_system_id_dq_state
-        elif c == "'":
-            self.pos += 1
-            self._err("unexpected-char-in-doctype")
-            self.doctype_system = []
-            self.state = self._doctype_system_id_sq_state
-        elif c == ">":
-            self.pos += 1
-            self._err("unexpected-end-of-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            self.state = self._data_state
-        else:
-            self.pos += 1
-            self._err("unexpected-char-in-doctype")
-            self.force_quirks = True
-            self.state = self._bogus_doctype_state
-        return True
-
-    def _before_doctype_system_id_state(self) -> bool:
-        # html-qt/htmltokenizer.cpp:1272-1311
-        m = _WS_RUN.match(self.html, self.pos)
-        if m:
-            self.pos = m.end()
-        c = self.html[self.pos] if self.pos < self.n else None
-        if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
-        self.pos += 1
-        if c == '"':
-            self.doctype_system = []
-            self.state = self._doctype_system_id_dq_state
-        elif c == "'":
-            self.doctype_system = []
-            self.state = self._doctype_system_id_sq_state
-        elif c == ">":
-            self._err("unexpected-end-of-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            self.state = self._data_state
-        else:
-            self._err("unexpected-char-in-doctype")
-            self.force_quirks = True
-            self.state = self._bogus_doctype_state
-        return True
-
-    def _doctype_system_id_dq_state(self) -> bool:
-        return self._doctype_id_generic(_ID_DQ_RUN, '"', "system",
-                                        self._after_doctype_system_id_state)
-
-    def _doctype_system_id_sq_state(self) -> bool:
-        return self._doctype_id_generic(_ID_SQ_RUN, "'", "system",
-                                        self._after_doctype_system_id_state)
 
     def _after_doctype_system_id_state(self) -> bool:
         # html-qt/htmltokenizer.cpp:1381-1410
@@ -1651,10 +1459,7 @@ class HTMLTokenizer:
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-doctype")
-            self.force_quirks = True
-            self._emit_doctype()
-            return False
+            return self._eof_in_doctype()
         self.pos += 1
         if c == ">":
             self._emit_doctype()

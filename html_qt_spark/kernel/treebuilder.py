@@ -486,6 +486,25 @@ class TreeBuilder:
             self._err("unexpected-end-tag")
         self._pop_until("p")
 
+    def _parse_text_element(self, name: str, attrs) -> None:
+        """WHATWG "generic raw text / RCDATA element parsing algorithm",
+        also for <script>: insert the element, remember the current mode,
+        enter text mode and have the tokenizer switch state."""
+        nid = self._insert_element(name, attrs)
+        if self.open_elements[-1] != nid:
+            # past MAX_DEPTH too: text mode ends by popping this element
+            self.open_elements.append(nid)
+        self.original_mode = self.mode
+        self.mode = "text"
+        self.tokenizer_switch = name
+
+    def _merge_attrs(self, nid: int, attrs) -> None:
+        # add the attributes the element lacks, never overwrite
+        # (HTMLAbstractPhase::startTagHtml, html-qt/htmlabstractphase.cpp:32-51)
+        existing = {k for k, _ in (self.attrs[nid] or [])}
+        self.attrs[nid] = list(self.attrs[nid] or []) + [
+            (k, v) for k, v in attrs if k not in existing]
+
     # ------------------------------------------- active formatting elements
 
     def _push_formatting(self, nid: int, token: tuple) -> None:
@@ -1197,11 +1216,7 @@ class TreeBuilder:
                 self._insert_element(name, list(tok[2]), push=False)
                 return
             if name in ("title", "noframes", "style", "script"):
-                # RCDATA / raw text / script data element
-                self._insert_element(name, list(tok[2]))
-                self.original_mode = self.mode
-                self.mode = "text"
-                self.tokenizer_switch = name
+                self._parse_text_element(name, list(tok[2]))
                 return
             if name == "noscript":
                 # scripting disabled: parse children normally
@@ -1228,13 +1243,20 @@ class TreeBuilder:
                 self.mode = "after_head"
                 return
             if name == "template":
-                if any(self.tag[nid] == "template" for nid in self.open_elements):
-                    self._generate_implied_end(thorough=True)
-                    self._pop_until("template")
-                    self._clear_formatting_to_marker()
-                    if self.template_modes:
-                        self.template_modes.pop()
-                    self._reset_insertion_mode()
+                if not any(self.tag[nid] == "template"
+                           for nid in self.open_elements):
+                    # a stray </template> (also in a template-context
+                    # fragment) must not reset the insertion mode
+                    self._err("unexpected-end-tag-in-template")
+                    return
+                self._generate_implied_end(thorough=True)
+                if self.tag[self._current()] != "template":
+                    self._err("unexpected-end-tag-in-template")
+                self._pop_until("template")
+                self._clear_formatting_to_marker()
+                if self.template_modes:
+                    self.template_modes.pop()
+                self._reset_insertion_mode()
                 return
             if name not in ("body", "html", "br"):
                 self._err("unexpected-end-tag")
@@ -1343,16 +1365,8 @@ class TreeBuilder:
     # (span/cite/abbr/...) miss the dict and take the two-call fast path.
 
     def _ibs_html(self, tok, name, attrs) -> None:
-        # merge attrs into root without overwrite
-        # (HTMLAbstractPhase::startTagHtml, html-qt/htmlabstractphase.cpp:32-51)
         self._err("unexpected-start-tag")
-        root = self.open_elements[0]
-        existing = {k for k, _ in (self.attrs[root] or [])}
-        merged = list(self.attrs[root] or [])
-        for k, v in attrs:
-            if k not in existing:
-                merged.append((k, v))
-        self.attrs[root] = merged
+        self._merge_attrs(self.open_elements[0], attrs)
 
     def _ibs_in_head(self, tok, name, attrs) -> None:
         self._tag_in_head(tok)
@@ -1361,13 +1375,7 @@ class TreeBuilder:
         self._err("unexpected-start-tag")
         if len(self.open_elements) > 1 \
                 and self.tag[self.open_elements[1]] == "body":
-            body = self.open_elements[1]
-            existing = {k for k, _ in (self.attrs[body] or [])}
-            merged = list(self.attrs[body] or [])
-            for k, v in attrs:
-                if k not in existing:
-                    merged.append((k, v))
-            self.attrs[body] = merged
+            self._merge_attrs(self.open_elements[1], attrs)
             self.frameset_ok = False
 
     def _ibs_frameset(self, tok, name, attrs) -> None:
@@ -1520,29 +1528,20 @@ class TreeBuilder:
         self._tag_in_body(("StartTag", "img", tok[2], tok[3]))
 
     def _ibs_textarea(self, tok, name, attrs) -> None:
-        self._insert_element(name, attrs)
+        self._parse_text_element(name, attrs)
         self.ignore_lf = True
-        self.original_mode = self.mode
         self.frameset_ok = False
-        self.mode = "text"
-        self.tokenizer_switch = name
 
     def _ibs_xmp(self, tok, name, attrs) -> None:
         if self._in_button_scope("p"):
             self._close_p()
         self._reconstruct_formatting()
         self.frameset_ok = False
-        self._insert_element(name, attrs)
-        self.original_mode = "in_body"
-        self.mode = "text"
-        self.tokenizer_switch = name
+        self._parse_text_element(name, attrs)
 
     def _ibs_rawtext(self, tok, name, attrs) -> None:
         self.frameset_ok = False
-        self._insert_element(name, attrs)
-        self.original_mode = "in_body"
-        self.mode = "text"
-        self.tokenizer_switch = name
+        self._parse_text_element(name, attrs)
 
     def _ibs_select(self, tok, name, attrs) -> None:
         self._reconstruct_formatting()
@@ -1705,9 +1704,6 @@ class TreeBuilder:
 
     # --------------------------------------------------------- in template
 
-    def _char_in_template(self, data: str) -> int:
-        return self._char_in_body(data)
-
     # start tags the spec routes to the in-head rules from in_template
     # WITHOUT touching the template insertion-mode stack
     _TEMPLATE_HEADISH = frozenset(
@@ -1717,22 +1713,7 @@ class TreeBuilder:
     def _tag_in_template(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if name == "template" and kind == "EndTag":
-            if not any(self.tag[nid] == "template"
-                       for nid in self.open_elements):
-                # spec: no template on the open stack -> error, ignore
-                # (critical for template-context fragments, where a
-                # stray </template> must NOT reset the insertion mode
-                # and synthesize head/body inside the fragment)
-                self._err("unexpected-end-tag-in-template")
-                return
-            self._generate_implied_end(thorough=True)
-            if self.tag[self._current()] != "template":
-                self._err("unexpected-end-tag-in-template")
-            self._pop_until("template")
-            self._clear_formatting_to_marker()
-            if self.template_modes:
-                self.template_modes.pop()
-            self._reset_insertion_mode()
+            self._tag_in_head(tok)
             return
         if kind == "StartTag":
             if name in self._TEMPLATE_HEADISH:
@@ -1782,12 +1763,11 @@ class TreeBuilder:
         return len(data)
 
     def _tag_text(self, tok: tuple) -> None:
-        if tok[0] == "EndTag":
-            self.open_elements.pop()
-            self.mode = self.original_mode
-        else:  # shouldn't happen: tokenizer guarantees matching end tag
-            self.open_elements.pop()
-            self.mode = self.original_mode
+        # in its text state the tokenizer emits no tag but the element's
+        # own end tag; anything else would close it and be reprocessed
+        self.open_elements.pop()
+        self.mode = self.original_mode
+        if tok[0] != "EndTag":
             self._process_token(tok)
 
     # ----------------------------------------------------------- in table
@@ -1915,9 +1895,6 @@ class TreeBuilder:
         self._tag_in_body(tok)
         self.foster_parenting = False
 
-    def _char_in_caption(self, data: str) -> int:
-        return self._char_in_body(data)
-
     def _tag_in_caption(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if (kind == "EndTag" and name == "caption") or \
@@ -1977,9 +1954,6 @@ class TreeBuilder:
             self.mode = "in_table"
             self._process_token(tok)
 
-    def _char_in_table_body(self, data: str) -> int:
-        return self._char_in_table(data)
-
     def _tag_in_table_body(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if kind == "StartTag":
@@ -2032,9 +2006,6 @@ class TreeBuilder:
                 return
         self._tag_in_table(tok)
 
-    def _char_in_row(self, data: str) -> int:
-        return self._char_in_table(data)
-
     def _tag_in_row(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if kind == "StartTag" and name in ("td", "th"):
@@ -2077,9 +2048,6 @@ class TreeBuilder:
             self._err("unexpected-end-tag")
             return
         self._tag_in_table(tok)
-
-    def _char_in_cell(self, data: str) -> int:
-        return self._char_in_body(data)
 
     def _close_cell(self) -> None:
         if self._in_table_scope("td"):
@@ -2191,9 +2159,6 @@ class TreeBuilder:
                 return
         self._err("unexpected-token-in-select")
 
-    def _char_in_select_in_table(self, data: str) -> int:
-        return self._char_in_select(data)
-
     def _tag_in_select_in_table(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if name in ("caption", "table", "tbody", "tfoot", "thead",
@@ -2228,14 +2193,6 @@ class TreeBuilder:
         self._err("unexpected-token-after-body")
         self.mode = "in_body"
         self._process_token(tok)
-
-    def _char_after_after_body(self, data: str) -> int:
-        ws = _ws_prefix(data)
-        if ws:
-            return self._char_in_body(data[:ws]) or ws
-        self._err("unexpected-char-after-body")
-        self.mode = "in_body"
-        return 0
 
     def _tag_after_after_body(self, tok: tuple) -> None:
         if tok[0] == "StartTag" and tok[1] == "html":
@@ -2501,3 +2458,14 @@ TreeBuilder._CHAR_DISPATCH = {
     name[len("_char_"):]: fn
     for name, fn in vars(TreeBuilder).items() if name.startswith("_char_")
 }
+# modes whose character rules are another mode's (WHATWG: "process the
+# token using the rules for" that mode)
+TreeBuilder._CHAR_DISPATCH.update(
+    in_template=TreeBuilder._char_in_body,
+    in_caption=TreeBuilder._char_in_body,
+    in_cell=TreeBuilder._char_in_body,
+    in_table_body=TreeBuilder._char_in_table,
+    in_row=TreeBuilder._char_in_table,
+    in_select_in_table=TreeBuilder._char_in_select,
+    after_after_body=TreeBuilder._char_after_body,
+)

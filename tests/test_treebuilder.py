@@ -61,6 +61,21 @@ def test_parse_leaves_no_reference_cycle():
         gc.enable()
 
 
+@pytest.mark.parametrize("element", ["script", "textarea", "title"])
+def test_text_element_past_max_depth(element):
+    # past MAX_DEPTH the text element is still pushed: its text stays out
+    # of the enclosing <div>, and its end tag (or EOF) pops only it
+    from html_qt_spark.kernel.extractor import extract_html
+
+    deep = "<div>" * 600
+    text = f"<{element}>var a='<p>x</p>';"
+    assert extract_html(f"{deep}{text}</{element}><p>after</p>") == \
+        [("text", "after", None)]
+    depth = len(parse(deep).open_elements)
+    assert len(parse(f"{deep}{text}</{element}>").open_elements) == depth
+    assert len(parse(f"{deep}{text}").open_elements) == depth
+
+
 def test_parent_pointers_consistent():
     tb = parse("<div><p>a<b>c</b></p><ul><li>x</ul></div>")
     for nid in range(1, len(tb.tag)):
