@@ -249,24 +249,25 @@ class HTMLTokenizer:
                 self._err("self-closing-flag-on-end-tag")
             self.tokens.append(("EndTag", name))
         else:
-            attrs = self.attrs
-            if not attrs:
-                out: list[tuple[str, str]] = []
-            elif len(attrs) == 1:
-                out = [(attrs[0][0], "".join(attrs[0][1]))]
-            else:
-                seen: set[str] = set()
-                out = []
-                for k, vparts in attrs:
-                    if k in seen:
-                        self._err("duplicate-attribute")
-                        continue
-                    seen.add(k)
-                    out.append((k, "".join(vparts)))
+            out = [(k, "".join(vparts)) for k, vparts in self.attrs]
+            if len(out) > 1:
+                out = self._attr_list(out)
             self.tokens.append(("StartTag", name, out, self.self_closing))
             self.last_start_tag = name
             if name in TEXT_STATES:
                 self._text_switch(name)
+
+    def _attr_list(self, pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
+        """A start tag's attributes: the first of each name is kept, each
+        later one is a duplicate-attribute error at ``self.pos`` (just
+        past the tag's ``>``)."""
+        kept: dict[str, str] = {}
+        for k, v in pairs:
+            if k in kept:
+                self._err("duplicate-attribute")
+            else:
+                kept[k] = v
+        return list(kept.items())
 
     def _text_switch(self, name: str) -> bool:
         """After a TEXT_STATES start tag: enter the text state the tree
@@ -411,31 +412,25 @@ class HTMLTokenizer:
                     if charbuf:
                         tokens.append(("Character", "".join(charbuf)))
                         charbuf.clear()
+                    pos = fm.end()
                     blob = fm.group(2)
+                    out: list[tuple[str, str]] = []
                     if blob:
-                        out: list[tuple[str, str]] = []
-                        seen = None
                         for am in _FAST_ATTR.finditer(blob):
                             v = am.group(2)
                             if v is None:
                                 v = am.group(3)
                             if v is None:
                                 v = am.group(4)
-                            k = am.group(1).lower()
-                            if seen is None:
-                                seen = {k}
-                            elif k in seen:
-                                self.pos = start + 1  # error position
-                                self._err("duplicate-attribute")
-                                continue
-                            else:
-                                seen.add(k)
-                            out.append((k, v if v is not None else ""))
-                    else:
-                        out = []
+                            out.append((am.group(1).lower(),
+                                        v if v is not None else ""))
+                        # dict(out) drops repeated names at C speed: only
+                        # a tag with a duplicate pays for the rule
+                        if len(out) > 1 and len(dict(out)) < len(out):
+                            self.pos = pos
+                            out = self._attr_list(out)
                     tokens.append(("StartTag", name, out, fm.group(3) == "/"))
                     self.last_start_tag = name
-                    pos = fm.end()
                     if name in TEXT_STATES and self._text_switch(name):
                         self.pos = pos
                         return True
@@ -952,47 +947,33 @@ class HTMLTokenizer:
             self.state = self._attribute_value_uq_state
         return True
 
-    def _attribute_value_dq_state(self) -> bool:
-        # html-qt/htmltokenizer.cpp:455-480 (run-coalesced)
-        m = _ATTR_DQ_RUN.match(self.html, self.pos)
+    def _attribute_value_quoted(self, run_rx, quote: str) -> bool:
+        # html-qt/htmltokenizer.cpp:455-507 (run-coalesced)
+        m = run_rx.match(self.html, self.pos)
         if m:
             self.attr_value.append(m.group())
             self.pos = m.end()
         c = self.html[self.pos] if self.pos < self.n else None
         if c is None:
-            self._err("eof-in-attribute-value-double-quote")
+            self._err("eof-in-attribute-value-double-quote" if quote == '"'
+                      else "eof-in-attribute-value-single-quote")
             return False
         self.pos += 1
-        if c == '"':
+        if c == quote:
             self.state = self._after_attribute_value_state
         elif c == "&":
-            t = self._consume_charref('"', in_attribute=True)
+            t = self._consume_charref(quote, in_attribute=True)
             self.attr_value.append(t if t is not None else "&")
         else:  # NUL
             self._err("invalid-codepoint")
             self.attr_value.append("�")
         return True
 
+    def _attribute_value_dq_state(self) -> bool:
+        return self._attribute_value_quoted(_ATTR_DQ_RUN, '"')
+
     def _attribute_value_sq_state(self) -> bool:
-        # html-qt/htmltokenizer.cpp:482-507
-        m = _ATTR_SQ_RUN.match(self.html, self.pos)
-        if m:
-            self.attr_value.append(m.group())
-            self.pos = m.end()
-        c = self.html[self.pos] if self.pos < self.n else None
-        if c is None:
-            self._err("eof-in-attribute-value-single-quote")
-            return False
-        self.pos += 1
-        if c == "'":
-            self.state = self._after_attribute_value_state
-        elif c == "&":
-            t = self._consume_charref("'", in_attribute=True)
-            self.attr_value.append(t if t is not None else "&")
-        else:
-            self._err("invalid-codepoint")
-            self.attr_value.append("�")
-        return True
+        return self._attribute_value_quoted(_ATTR_SQ_RUN, "'")
 
     def _attribute_value_uq_state(self) -> bool:
         # html-qt/htmltokenizer.cpp:509-541

@@ -153,6 +153,16 @@ _LIMITED_QUIRKS_PREFIXES = tuple(s.lower() for s in (
 
 MARKER = -1  # active-formatting-elements scope marker
 
+# "reset the insertion mode appropriately": the steps that map an element
+# to a mode outright (td/th/head, template, html and the last node are
+# steps of their own, see TreeBuilder._reset_insertion_mode)
+_RESET_MODE = {
+    "select": "in_select", "tr": "in_row", "tbody": "in_table_body",
+    "thead": "in_table_body", "tfoot": "in_table_body",
+    "caption": "in_caption", "colgroup": "in_column_group",
+    "table": "in_table", "body": "in_body", "frameset": "in_frameset",
+}
+
 # Open-elements depth cap (browsers cap DOM depth similarly; WebKit uses
 # 512).  Elements past the cap are inserted into the tree but NOT pushed,
 # which bounds every scope scan to O(MAX_DEPTH) and keeps pathological
@@ -304,6 +314,14 @@ class TreeBuilder:
         self.parent[child] = parent_id
         self.children[parent_id].append(child)
 
+    def _place(self, nid: int, parent_id: int, index: int | None) -> None:
+        """Put ``nid`` at an :meth:`_insertion_place` result."""
+        if index is None:
+            self._append(nid, parent_id)
+        else:
+            self.parent[nid] = parent_id
+            self.children[parent_id].insert(index, nid)
+
     def _detach(self, child: int) -> None:
         p = self.parent[child]
         if p != -1:
@@ -375,12 +393,7 @@ class TreeBuilder:
                 self._add_template_content(nid)
             return nid
         nid = self._new_node(name, attrs or [])
-        parent_id, index = self._insertion_place()
-        if index is None:
-            self._append(nid, parent_id)
-        else:
-            self.parent[nid] = parent_id
-            self.children[parent_id].insert(index, nid)
+        self._place(nid, *self._insertion_place())
         if push and len(self.open_elements) < MAX_DEPTH:
             self.open_elements.append(nid)
         if name == "template" and not self.reference_compat:
@@ -433,12 +446,7 @@ class TreeBuilder:
         if parent is not None:
             self._append(nid, parent)
         else:
-            parent_id, index = self._insertion_place()
-            if index is None:
-                self._append(nid, parent_id)
-            else:
-                self.parent[nid] = parent_id
-                self.children[parent_id].insert(index, nid)
+            self._place(nid, *self._insertion_place())
 
     # ------------------------------------------------------------- scopes
 
@@ -456,9 +464,6 @@ class TreeBuilder:
 
     def _in_button_scope(self, name: str) -> bool:
         return self._has_in_scope(name, _SCOPE_BUTTON)
-
-    def _in_list_scope(self, name: str) -> bool:
-        return self._has_in_scope(name, _SCOPE_LIST_ITEM)
 
     def _in_table_scope(self, name: str) -> bool:
         return self._has_in_scope(name, _SCOPE_TABLE)
@@ -653,22 +658,14 @@ class TreeBuilder:
                 self._append(last_node, node_id)
                 last_node = node_id
 
-            # move last_node under common ancestor (foster-aware)
+            # move last_node under common ancestor: a table-context
+            # ancestor always foster-parents it, a <template> one takes
+            # it into its #content fragment
             self._detach(last_node)
-            if self.tag[common_ancestor] in _TABLE_CTX:
-                save = self.foster_parenting
-                self.foster_parenting = True
-                parent_id, index = self._insertion_place(common_ancestor)
-                self.foster_parenting = save
-                if index is None:
-                    self._append(last_node, parent_id)
-                else:
-                    self.parent[last_node] = parent_id
-                    self.children[parent_id].insert(index, last_node)
-            else:
-                # a <template> common ancestor never receives children
-                # directly — redirect into its #content fragment
-                self._append(last_node, self._content_of(common_ancestor))
+            save = self.foster_parenting
+            self.foster_parenting = True
+            self._place(last_node, *self._insertion_place(common_ancestor))
+            self.foster_parenting = save
 
             # new clone of fmt; move furthest-block children into it
             # (this is the reparentChildren move, html-qt/htmltree.cpp:126-132)
@@ -706,53 +703,39 @@ class TreeBuilder:
     # ------------------------------------------------------- mode helpers
 
     def _reset_insertion_mode(self) -> None:
-        for idx in range(len(self.open_elements) - 1, -1, -1):
-            nid = self.open_elements[idx]
-            t = self.tag[nid]
+        """WHATWG "reset the insertion mode appropriately" (13.2.4.1);
+        fragment parsing picks its first mode with it too."""
+        oe = self.open_elements
+        for idx in range(len(oe) - 1, -1, -1):
+            t = self.tag[oe[idx]]
             last = idx == 0
             if last and self.fragment_context is not None:
-                # spec 13.2.4.1 fragment case: the ROOT node stands in
-                # for the fragment's context element
+                # the root node stands in for the fragment's context
                 t = self.fragment_context
-            if t == "select":
-                self.mode = "in_select"
-                return
-            if t in ("td", "th") and not last:
-                self.mode = "in_cell"
-                return
-            if t == "tr":
-                self.mode = "in_row"
-                return
-            if t in ("tbody", "thead", "tfoot"):
-                self.mode = "in_table_body"
-                return
-            if t == "caption":
-                self.mode = "in_caption"
-                return
-            if t == "colgroup":
-                self.mode = "in_column_group"
-                return
-            if t == "table":
-                self.mode = "in_table"
-                return
-            if t == "template":
-                self.mode = (self.template_modes[-1]
-                             if self.template_modes else "in_template")
-                return
-            if t == "head" and not last:
-                self.mode = "in_head"
-                return
-            if t == "body":
-                self.mode = "in_body"
-                return
-            if t == "frameset":
-                self.mode = "in_frameset"
-                return
-            if t == "html":
-                self.mode = "before_head" if self.head_id == -1 else "after_head"
-                return
-            if last:
-                self.mode = "in_body"
+            mode = _RESET_MODE.get(t)
+            if mode == "in_select" and not last:
+                # a select in a table, unless a template lies between
+                for anc in reversed(oe[:idx]):
+                    if self.tag[anc] == "template":
+                        break
+                    if self.tag[anc] == "table":
+                        mode = "in_select_in_table"
+                        break
+            elif mode is None:
+                if t in ("td", "th") and not last:
+                    mode = "in_cell"
+                elif t == "head" and not last:
+                    mode = "in_head"
+                elif t == "template":
+                    mode = (self.template_modes[-1]
+                            if self.template_modes else "in_template")
+                elif t == "html":
+                    mode = ("before_head" if self.head_id == -1
+                            else "after_head")
+                elif last:
+                    mode = "in_body"
+            if mode is not None:
+                self.mode = mode
                 return
 
     # --------------------------------------------------------- main drive
@@ -950,6 +933,22 @@ class TreeBuilder:
             return True
         return False
 
+    def _insert_foreign(self, name: str, attrs, ns: str,
+                        self_closing: bool) -> None:
+        """WHATWG "insert a foreign element" in ``ns`` ("svg" or "math"),
+        after the spec's tag-name and attribute adjustments."""
+        if ns == "svg":
+            name = _SVG_TAG_ADJUST.get(name, name)
+            adjust = _SVG_ATTR_ADJUST
+        else:
+            adjust = _MATH_ATTR_ADJUST
+        nid = self._insert_element(
+            name, [(_FOREIGN_ATTR_ADJUST.get(k, adjust.get(k, k)), v)
+                   for k, v in attrs])
+        self.ns[nid] = ns
+        if self_closing and self.open_elements[-1] == nid:
+            self.open_elements.pop()
+
     def _process_foreign_tag(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if kind == "Comment":
@@ -974,21 +973,8 @@ class TreeBuilder:
                     self.open_elements.pop()
                 self._process_token(tok)
                 return
-            cur_ns = self.ns[self._current()]
-            if cur_ns == "svg":
-                adj = _SVG_TAG_ADJUST.get(name, name)
-                attrs = [(_FOREIGN_ATTR_ADJUST.get(
-                              k, _SVG_ATTR_ADJUST.get(k, k)), v)
-                         for k, v in tok[2]]
-            else:
-                adj = name
-                attrs = [(_FOREIGN_ATTR_ADJUST.get(
-                              k, _MATH_ATTR_ADJUST.get(k, k)), v)
-                         for k, v in tok[2]]
-            nid = self._insert_element(adj, attrs)
-            self.ns[nid] = cur_ns
-            if tok[3] and self.open_elements and self._current() == nid:
-                self.open_elements.pop()
+            self._insert_foreign(name, tok[2], self.ns[self._current()],
+                                 tok[3])
             return
         # EndTag: case-insensitive walk down the stack; an HTML-namespace
         # node on the way delegates back to the insertion-mode rules
@@ -1005,40 +991,26 @@ class TreeBuilder:
         # nothing matched: ignore
 
     def _process_eof(self) -> None:
-        # close enough for all modes: synthesize missing structure
-        if self.mode == "text":
-            # EOF inside unterminated RCDATA/RAWTEXT/script content
-            # (WHATWG 13.2.6.4.8 "in text" EOF rule): pop the open
-            # element and restore the original insertion mode so the
-            # normalization chain below still synthesizes head/body.
-            self._err("expected-named-closing-tag-but-got-eof")
-            self.open_elements.pop()
-            self.mode = self.original_mode
-        if self.mode == "in_template":
-            # contained-template EOF (spec: pop to template, clear
-            # formatting to marker, reset insertion mode, reprocess EOF)
-            if any(self.tag[nid] == "template" for nid in self.open_elements):
+        """WHATWG end of file: run the current mode's EOF step until a
+        mode stops parsing.  A mode with no _EOF_STEPS entry stops,
+        unless a template is open: in_body and every mode that defers
+        to it then close the template as in_template does."""
+        while True:
+            step = _EOF_STEPS.get(self.mode)
+            if step is not None:
+                step(self)
+            elif self._template_open():
                 self._err("eof-in-template")
-                self._pop_until("template")
-                self._clear_formatting_to_marker()
-                if self.template_modes:
-                    self.template_modes.pop()
-                self._reset_insertion_mode()
-        if self.mode == "initial":
-            self.quirks_mode = "quirks"
-            self._mode_initial_anything()
-        if self.mode == "before_html":
-            self._before_html_anything()
-        if self.mode == "before_head":
-            self._before_head_anything()
-        if self.mode == "in_head":
-            self.open_elements.pop()
-            self.mode = "after_head"
-        if self.mode == "after_head":
-            self._after_head_anything()
-        if self.mode == "in_table_text":
-            self._flush_table_text()
+                self._close_template()
+            else:
+                break
         self.done = True
+
+    def _eof_text(self) -> None:
+        # EOF inside unterminated RCDATA/RAWTEXT/script content
+        self._err("expected-named-closing-tag-but-got-eof")
+        self.open_elements.pop()
+        self.mode = self.original_mode
 
     # ----------------------------------------------------------- comments
 
@@ -1099,36 +1071,10 @@ class TreeBuilder:
         self._mode_initial_anything()
         return ws
 
-    # start-tag names the fused startup ladder must NOT shortcut: each is
-    # handled specially somewhere in before_html/before_head/in_head/
-    # after_head (attr merge, head routing, text-mode switch, frameset...)
-    _INITIAL_LADDER_EXCLUDE = frozenset(
-        """html head body br frameset base basefont bgsound link meta
-        noframes noscript script style template title""".split())
-
     def _tag_initial(self, tok: tuple) -> None:
         self._err("expected-doctype-but-got-start-tag"
                   if tok[0] == "StartTag" else
                   "expected-doctype-but-got-end-tag")
-        if tok[0] == "StartTag" \
-                and tok[1] not in self._INITIAL_LADDER_EXCLUDE:
-            # fused ladder for the overwhelmingly-common doctype-less
-            # fragment opening with an ordinary tag: initial → before_html
-            # (synthesize <html>) → before_head (synthesize <head>) →
-            # in_head (pop head) → after_head (synthesize <body>) →
-            # in_body, which otherwise costs 5 reprocess dispatches per
-            # document.  Identical tree, mode, stack, quirks flag and
-            # error output by construction (none of the intermediate
-            # handlers err or set flags for these names).
-            self.quirks_mode = "quirks"
-            nid = self._new_node("html", [])
-            self._append(nid, 0)
-            self.open_elements.append(nid)
-            self.head_id = self._insert_element("head", [], push=False)
-            self._insert_element("body", [])
-            self.mode = "in_body"
-            self._tag_in_body(tok)
-            return
         self._mode_initial_anything()
         self._process_token(tok)
 
@@ -1195,15 +1141,17 @@ class TreeBuilder:
 
     _HEAD_VOID = frozenset("base basefont bgsound link meta".split())
 
+    def _in_head_anything(self) -> None:
+        self.open_elements.pop()
+        self.mode = "after_head"
+
     def _char_in_head(self, data: str) -> int:
         ws = _ws_prefix(data)
         if ws:
             self._insert_text(data[:ws])
         if ws == len(data):
             return ws
-        # anything else: pop head, reprocess in after_head
-        self.open_elements.pop()
-        self.mode = "after_head"
+        self._in_head_anything()
         return ws
 
     def _tag_in_head(self, tok: tuple) -> None:
@@ -1239,12 +1187,10 @@ class TreeBuilder:
                 return
         else:
             if name == "head":
-                self.open_elements.pop()
-                self.mode = "after_head"
+                self._in_head_anything()
                 return
             if name == "template":
-                if not any(self.tag[nid] == "template"
-                           for nid in self.open_elements):
+                if not self._template_open():
                     # a stray </template> (also in a template-context
                     # fragment) must not reset the insertion mode
                     self._err("unexpected-end-tag-in-template")
@@ -1252,18 +1198,35 @@ class TreeBuilder:
                 self._generate_implied_end(thorough=True)
                 if self.tag[self._current()] != "template":
                     self._err("unexpected-end-tag-in-template")
-                self._pop_until("template")
-                self._clear_formatting_to_marker()
-                if self.template_modes:
-                    self.template_modes.pop()
-                self._reset_insertion_mode()
+                self._close_template()
                 return
             if name not in ("body", "html", "br"):
                 self._err("unexpected-end-tag")
                 return
-        self.open_elements.pop()
-        self.mode = "after_head"
+        self._in_head_anything()
         self._process_token(tok)
+
+    def _template_open(self) -> bool:
+        """Whether an HTML ``template`` element is on the stack."""
+        tags, ns = self.tag, self.ns
+        for nid in self.open_elements:
+            if tags[nid] == "template" and ns[nid] == "html":
+                return True
+        return False
+
+    def _close_template(self) -> None:
+        # shared by </template> and EOF: pop to the template, clear the
+        # formatting list to its marker, leave its insertion mode
+        self._pop_until("template")
+        self._clear_formatting_to_marker()
+        if self.template_modes:
+            self.template_modes.pop()
+        self._reset_insertion_mode()
+
+    def _noscript_anything(self, code: str) -> None:
+        self._err(code)
+        self.open_elements.pop()
+        self.mode = "in_head"
 
     def _char_in_head_noscript(self, data: str) -> int:
         ws = _ws_prefix(data)
@@ -1271,9 +1234,7 @@ class TreeBuilder:
             self._insert_text(data[:ws])
         if ws == len(data):
             return ws
-        self._err("char-in-head-noscript")
-        self.open_elements.pop()
-        self.mode = "in_head"
+        self._noscript_anything("char-in-head-noscript")
         return ws
 
     def _tag_in_head_noscript(self, tok: tuple) -> None:
@@ -1289,9 +1250,7 @@ class TreeBuilder:
         if kind == "EndTag" and name != "br":
             self._err("unexpected-end-tag-in-noscript")
             return
-        self._err("unexpected-tag-in-noscript")
-        self.open_elements.pop()
-        self.mode = "in_head"
+        self._noscript_anything("unexpected-tag-in-noscript")
         self._process_token(tok)
 
     # ---------------------------------------------------------- after head
@@ -1366,7 +1325,8 @@ class TreeBuilder:
 
     def _ibs_html(self, tok, name, attrs) -> None:
         self._err("unexpected-start-tag")
-        self._merge_attrs(self.open_elements[0], attrs)
+        if not self._template_open():
+            self._merge_attrs(self.open_elements[0], attrs)
 
     def _ibs_in_head(self, tok, name, attrs) -> None:
         self._tag_in_head(tok)
@@ -1374,7 +1334,8 @@ class TreeBuilder:
     def _ibs_body(self, tok, name, attrs) -> None:
         self._err("unexpected-start-tag")
         if len(self.open_elements) > 1 \
-                and self.tag[self.open_elements[1]] == "body":
+                and self.tag[self.open_elements[1]] == "body" \
+                and not self._template_open():
             self._merge_attrs(self.open_elements[1], attrs)
             self.frameset_ok = False
 
@@ -1416,25 +1377,14 @@ class TreeBuilder:
             self._close_p()
         self.form_id = self._insert_element(name, attrs)
 
-    def _ibs_li(self, tok, name, attrs) -> None:
+    def _ibs_list_item(self, tok, name, attrs) -> None:
+        # <li> closes an open li, <dd>/<dt> an open dd or dt, unless a
+        # special element other than address/div/p comes first
         self.frameset_ok = False
+        closes = ("li",) if name == "li" else ("dd", "dt")
         for nid in reversed(self.open_elements):
             t = self.tag[nid]
-            if t == "li":
-                self._generate_implied_end(exclude="li")
-                self._pop_until("li")
-                break
-            if t in SPECIAL and t not in ("address", "div", "p"):
-                break
-        if self._in_button_scope("p"):
-            self._close_p()
-        self._insert_element(name, attrs)
-
-    def _ibs_dd_dt(self, tok, name, attrs) -> None:
-        self.frameset_ok = False
-        for nid in reversed(self.open_elements):
-            t = self.tag[nid]
-            if t in ("dd", "dt"):
+            if t in closes:
                 self._generate_implied_end(exclude=t)
                 self._pop_until(t)
                 break
@@ -1540,7 +1490,8 @@ class TreeBuilder:
         self._parse_text_element(name, attrs)
 
     def _ibs_rawtext(self, tok, name, attrs) -> None:
-        self.frameset_ok = False
+        if name == "iframe":
+            self.frameset_ok = False
         self._parse_text_element(name, attrs)
 
     def _ibs_select(self, tok, name, attrs) -> None:
@@ -1572,14 +1523,7 @@ class TreeBuilder:
         # foreign-content root: namespace flips; subsequent tokens
         # route through _process_foreign_tag until breakout/close
         self._reconstruct_formatting()
-        adjust = (_SVG_ATTR_ADJUST if name == "svg"
-                  else _MATH_ATTR_ADJUST)
-        attrs = [(_FOREIGN_ATTR_ADJUST.get(k, adjust.get(k, k)), v)
-                 for k, v in attrs]
-        nid = self._insert_element(name, attrs)
-        self.ns[nid] = name
-        if tok[3] and self.open_elements and self._current() == nid:
-            self.open_elements.pop()
+        self._insert_foreign(name, attrs, name, tok[3])
 
     def _tag_in_body(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
@@ -1613,14 +1557,19 @@ class TreeBuilder:
         self.mode = "after_body"
         self._process_token(tok)
 
-    def _ibe_block(self, tok, name) -> None:
-        if not self._in_scope(name):
+    def _ibe_block(self, tok, name) -> bool:
+        # also </li> (list-item scope) and </dd>, </dt>: exclude=name
+        # keeps those three out of the implied end tags and is a no-op
+        # for every other name routed here.  Returns whether it closed.
+        if not self._has_in_scope(
+                name, _SCOPE_LIST_ITEM if name == "li" else _SCOPE_DEFAULT):
             self._err("unexpected-end-tag")
-            return
-        self._generate_implied_end()
+            return False
+        self._generate_implied_end(exclude=name)
         if self.tag[self._current()] != name:
             self._err("end-tag-too-early")
         self._pop_until(name)
+        return True
 
     def _ibe_form(self, tok, name) -> None:
         node = self.form_id
@@ -1640,24 +1589,6 @@ class TreeBuilder:
             if not self._in_button_scope("p"):
                 return  # MAX_DEPTH cap kept it off the stack
         self._close_p()
-
-    def _ibe_li(self, tok, name) -> None:
-        if not self._in_list_scope("li"):
-            self._err("unexpected-end-tag")
-            return
-        self._generate_implied_end(exclude="li")
-        if self.tag[self._current()] != "li":
-            self._err("end-tag-too-early")
-        self._pop_until("li")
-
-    def _ibe_dd_dt(self, tok, name) -> None:
-        if not self._in_scope(name):
-            self._err("unexpected-end-tag")
-            return
-        self._generate_implied_end(exclude=name)
-        if self.tag[self._current()] != name:
-            self._err("end-tag-too-early")
-        self._pop_until(name)
 
     def _ibe_heading(self, tok, name) -> None:
         # single stack walk instead of six _in_scope scans: true iff some
@@ -1684,14 +1615,8 @@ class TreeBuilder:
         self._adoption_agency(name)
 
     def _ibe_marker_container(self, tok, name) -> None:
-        if not self._in_scope(name):
-            self._err("unexpected-end-tag")
-            return
-        self._generate_implied_end()
-        if self.tag[self._current()] != name:
-            self._err("end-tag-too-early")
-        self._pop_until(name)
-        self._clear_formatting_to_marker()
+        if self._ibe_block(tok, name):
+            self._clear_formatting_to_marker()
 
     def _ibe_br(self, tok, name) -> None:
         self._err("unexpected-end-tag-treated-as")
@@ -1949,6 +1874,12 @@ class TreeBuilder:
         if kind == "EndTag" and name == "col":
             self._err("no-end-tag")
             return
+        if name == "template":
+            self._tag_in_head(tok)
+            return
+        if kind == "StartTag" and name == "html":
+            self._tag_in_body(tok)
+            return
         if self.tag[self._current()] == "colgroup":
             self.open_elements.pop()
             self.mode = "in_table"
@@ -2204,7 +2135,14 @@ class TreeBuilder:
 
     # ---------------------------------------------------------- frameset
 
+    _FRAMESET_CHAR_ERR = {
+        "in_frameset": "unexpected-char-in-frameset",
+        "after_frameset": "unexpected-char-after-frameset",
+        "after_after_frameset": "expected-eof",
+    }
+
     def _char_in_frameset(self, data: str) -> int:
+        # also after_frameset and after_after_frameset
         ws = _ws_prefix(data)
         if ws:
             self._insert_text(data[:ws])
@@ -2212,7 +2150,7 @@ class TreeBuilder:
         # consume the whole non-whitespace run in one step (each char is
         # individually ignored per spec; one error suffices) — returning
         # 1 per char made _process_chars re-slice O(n^2) on large docs
-        self._err("unexpected-char-in-frameset")
+        self._err(self._FRAMESET_CHAR_ERR[self.mode])
         return _non_ws_prefix(data)
 
     def _tag_in_frameset(self, tok: tuple) -> None:
@@ -2238,14 +2176,6 @@ class TreeBuilder:
             return
         self._err("unexpected-token-in-frameset")
 
-    def _char_after_frameset(self, data: str) -> int:
-        ws = _ws_prefix(data)
-        if ws:
-            self._insert_text(data[:ws])
-            return ws
-        self._err("unexpected-char-after-frameset")
-        return _non_ws_prefix(data)
-
     def _tag_after_frameset(self, tok: tuple) -> None:
         kind, name = tok[0], tok[1]
         if kind == "EndTag" and name == "html":
@@ -2258,14 +2188,6 @@ class TreeBuilder:
             self._tag_in_body(tok)
             return
         self._err("unexpected-token-after-frameset")
-
-    def _char_after_after_frameset(self, data: str) -> int:
-        ws = _ws_prefix(data)
-        if ws:
-            self._insert_text(data[:ws])
-            return ws
-        self._err("expected-eof")
-        return _non_ws_prefix(data)
 
     def _tag_after_after_frameset(self, tok: tuple) -> None:
         if tok[0] == "StartTag" and tok[1] in ("html", "noframes"):
@@ -2285,19 +2207,6 @@ def _ws_prefix(data: str) -> int:
 def _non_ws_prefix(data: str) -> int:
     m = _NON_WS_PREFIX_RX.match(data)
     return m.end() if m else 0
-
-
-# context -> initial insertion mode, per the "reset the insertion mode
-# appropriately" algorithm evaluated with node = the context element
-# (fragment case, WHATWG 13.2.4.1 / 13.4 step 4)
-_FRAGMENT_MODE = {
-    "select": "in_select", "td": "in_cell", "th": "in_cell",
-    "tr": "in_row", "tbody": "in_table_body", "thead": "in_table_body",
-    "tfoot": "in_table_body", "caption": "in_caption",
-    "colgroup": "in_column_group", "table": "in_table",
-    "template": "in_template", "frameset": "in_frameset",
-    "html": "before_head",
-}
 
 
 def parse_fragment(html_text: str, *, context: str = "body",
@@ -2355,7 +2264,6 @@ def _parse(html_text: str, reference_compat: bool = False,
         tb.open_elements.append(root)
         tb.fragment_root = root  # serialize/extract from here
         tb.fragment_context = context
-        tb.mode = _FRAGMENT_MODE.get(context, "in_body")
         if context == "template" and not reference_compat:
             # spec 13.4 step 11: a template context seeds the stack of
             # template insertion modes, so table-structure routing and
@@ -2369,6 +2277,7 @@ def _parse(html_text: str, reference_compat: bool = False,
             tb._append(fid, root)
             tb.open_elements.append(fid)
             tb.fragment_root = fid
+        tb._reset_insertion_mode()  # picks the first mode (spec 13.4)
     if not reference_compat:
         # the reference's tree never drives its tokenizer
         tk.tree = tb  # tokenizer -> tree only: no reference cycle
@@ -2414,8 +2323,8 @@ def _build_in_body_start() -> dict:
         d[n] = tb._ibs_foreign_root
     d.update(
         html=tb._ibs_html, body=tb._ibs_body, frameset=tb._ibs_frameset,
-        form=tb._ibs_form, li=tb._ibs_li, dd=tb._ibs_dd_dt,
-        dt=tb._ibs_dd_dt, plaintext=tb._ibs_plaintext,
+        form=tb._ibs_form, li=tb._ibs_list_item, dd=tb._ibs_list_item,
+        dt=tb._ibs_list_item, plaintext=tb._ibs_plaintext,
         button=tb._ibs_button, table=tb._ibs_table, input=tb._ibs_input,
         hr=tb._ibs_hr, image=tb._ibs_image, textarea=tb._ibs_textarea,
         xmp=tb._ibs_xmp, select=tb._ibs_select,
@@ -2429,7 +2338,7 @@ _IN_BODY_START = _build_in_body_start()
 def _build_in_body_end() -> dict:
     tb = TreeBuilder
     d: dict = {}
-    for n in _P_CLOSERS:
+    for n in (*_P_CLOSERS, "li", "dd", "dt"):
         d[n] = tb._ibe_block
     for n in _HEADINGS:
         d[n] = tb._ibe_heading
@@ -2439,14 +2348,26 @@ def _build_in_body_end() -> dict:
         d[n] = tb._ibe_marker_container
     d.update(
         body=tb._ibe_body, html=tb._ibe_html, form=tb._ibe_form,
-        p=tb._ibe_p, li=tb._ibe_li, dd=tb._ibe_dd_dt, dt=tb._ibe_dd_dt,
-        br=tb._ibe_br, template=tb._ibe_template,
+        p=tb._ibe_p, br=tb._ibe_br, template=tb._ibe_template,
     )
     return d
 
 
 _IN_BODY_END = _build_in_body_end()
 
+
+# insertion mode -> its end-of-file step (TreeBuilder._process_eof)
+_EOF_STEPS = {
+    "initial": TreeBuilder._mode_initial_anything,
+    "before_html": TreeBuilder._before_html_anything,
+    "before_head": TreeBuilder._before_head_anything,
+    "in_head": TreeBuilder._in_head_anything,
+    "in_head_noscript":
+        lambda tb: tb._noscript_anything("eof-in-head-noscript"),
+    "after_head": TreeBuilder._after_head_anything,
+    "text": TreeBuilder._eof_text,
+    "in_table_text": TreeBuilder._flush_table_text,
+}
 
 # mode-name -> unbound handler dispatch tables (built once at import;
 # avoids per-token "_tag_" + mode string builds and getattr lookups)
@@ -2468,4 +2389,6 @@ TreeBuilder._CHAR_DISPATCH.update(
     in_row=TreeBuilder._char_in_table,
     in_select_in_table=TreeBuilder._char_in_select,
     after_after_body=TreeBuilder._char_after_body,
+    after_frameset=TreeBuilder._char_in_frameset,
+    after_after_frameset=TreeBuilder._char_in_frameset,
 )

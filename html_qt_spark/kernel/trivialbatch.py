@@ -24,9 +24,10 @@ Why each construct is output-equivalent to the spec pipeline,
 ``extract_spans(parse(...))`` (pinned by tests/test_trivialbatch.py and
 tests/test_trivialspans.py against the tokenizer -> tree builder run):
 
-* Every tag above is outside ``TreeBuilder._INITIAL_LADDER_EXCLUDE``, so
-  the document scaffolds to html/head/body, and none is a raw-text/
-  template/foreign/table element.
+* None of the tags above gets special handling in the before_html,
+  before_head, in_head or after_head rules, so the document scaffolds
+  to html/head/body, and none is a raw-text/template/foreign/table
+  element.
 * PAIR tags are BLOCK_TAGS: the open tag flushes any pending text run
   and starts a block; the matching close pops it (p via close-p, h1-6
   via the heading branch, li/blockquote via their scope walks — with

@@ -30,6 +30,12 @@ CASES = [
      '| <tbody>\n|   <tr>\n|     <td>\n|       "x"'),
     ("select", "<option>a<option>b",
      '| <option>\n|   "a"\n| <option>\n|   "b"'),
+    # a td/th context is the last node, so the reset algorithm gives
+    # in_body, not in_cell: <table> inside the select is ignored
+    ("td", "<select><option>a<table><tr><td>b",
+     '| <select>\n|   <option>\n|     "ab"'),
+    ("th", "<select><option>a<table><tr><td>b",
+     '| <select>\n|   <option>\n|     "ab"'),
     ("ul", "<li>one<li>two",
      '| <li>\n|   "one"\n| <li>\n|   "two"'),
     # foreign context: children are foreign, integration points work
@@ -77,8 +83,12 @@ def test_fragment_script_end_tag_matching():
 def test_fragment_never_crashes_on_garbage():
     for ctx in ("body", "td", "select", "svg", "title", "template",
                 "frameset", "colgroup", "caption", "html", "head"):
-        tb = parse_fragment("</" * 20 + "\x00<p<b>&#xD800;", context=ctx)
-        assert tb.tag[0] == "#document"
+        # the second input sent a td/th context into endless recursion
+        # while it started in in_cell with no cell open
+        for data in ("</" * 20 + "\x00<p<b>&#xD800;",
+                     "<math><tr><mi><b></tr>x"):
+            tb = parse_fragment(data, context=ctx)
+            assert tb.tag[0] == "#document"
 
 
 def test_fragment_context_spark_surface():

@@ -102,6 +102,11 @@ def test_fuzz_invariants(seed):
     for nid, kids in enumerate(tb.children):
         for ch in kids:
             assert tb.parent[ch] == nid
+    # a whole-document parse always ends with <body> or <frameset>
+    # under <html>
+    html_id = next(c for c in tb.children[0] if tb.tag[c] == "html")
+    assert any(tb.tag[c] in ("body", "frameset")
+               for c in tb.children[html_id]), html
 
     # 3. extraction: valid kinds, deterministic
     spans = extract_html(html)

@@ -91,6 +91,16 @@ def test_reset_reuses_instance():
     assert t2[0] == ("StartTag", "div", [], False)
 
 
+def test_duplicate_attribute_reported_past_the_tag():
+    # the fast tag scan (first input) and the state machine (a charref
+    # in a value sends the second through it) keep the first value and
+    # report the duplicate at the same place: just past the tag's ">"
+    for html in ("<p>ab<a x=1 x=2>", "<p>ab<a x=1 x=&amp;>"):
+        tokens, errors = tokenize(html)
+        assert tokens[-1] == ("StartTag", "a", [("x", "1")], False)
+        assert errors == [("duplicate-attribute", len(html))]
+
+
 @pytest.mark.parametrize("ch", ["K", "İ", "ſ"])
 def test_names_lowercase_ascii_letters_only(ch):
     # WHATWG lowercases ASCII upper alphas only; str.lower() would fold

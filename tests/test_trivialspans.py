@@ -221,7 +221,7 @@ VOIDS = ["br", "img", "hr", "input", "wbr", "embed", "source"]
 def _random_doc(rng: random.Random) -> str:
     """Simple markup outside the trivial grammar: attributes, voids,
     media, ignored start tags and mis-nested end tags."""
-    parts = [f"<{rng.choice(TAGS)}>"]  # ladder-qualifying opener
+    parts = [f"<{rng.choice(TAGS)}>"]  # an opener that scaffolds html/head/body
     for _ in range(rng.randint(1, 40)):
         r = rng.random()
         if r < 0.35:
